@@ -26,6 +26,9 @@ record.  Two consecutive runs at different core counts now leave both
 detail records readable.  No query entry was removed or renamed and the
 timing loop is untouched.
 
+``--out-dir DIR`` writes both detail files to DIR instead of the
+repository root.
+
 Each query is forced end-to-end with the noop sink (full computation, no
 driver-side collect cost).  Session startup is excluded; per-query times
 are wall-clock.
@@ -33,6 +36,7 @@ are wall-clock.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -344,6 +348,13 @@ HEADLINE = [
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description="Time the headline queries.")
+    ap.add_argument(
+        "--out-dir",
+        default=os.path.dirname(os.path.abspath(__file__)),
+        help="where BENCH_DETAIL*.json are written (default: the repository root)",
+    )
+    out_dir = ap.parse_args().out_dir
     registry.load_all()
     spark = get_spark("merl_etl_spark_bench")
 
@@ -388,12 +399,11 @@ def main() -> None:
             sorted(times.items(), key=lambda kv: kv[1], reverse=True)[:25]
         ),
     }
-    here = os.path.dirname(os.path.abspath(__file__))
     detail = json.dumps({**summary, "queries": times}, indent=1, sort_keys=True)
     # BENCH_DETAIL.json stays (last run, self-describing via "cpus");
     # the keyed copy survives a later run at a different core count
     for fname in ("BENCH_DETAIL.json", f"BENCH_DETAIL_c{cpus}.json"):
-        with open(os.path.join(here, fname), "w") as fh:
+        with open(os.path.join(out_dir, fname), "w") as fh:
             fh.write(detail)
     print(json.dumps(summary), flush=True)
 

@@ -221,12 +221,13 @@ def cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation, so the exchange carries every emission — halving the
     # key bytes measured 144 -> 113 s on the 100× census (warm
     # interleaved A/B; edge list byte-identical).  assert_true keeps the
-    # pack LOUD: an id outside [0, 2^32) fails the job instead of
-    # silently aliasing pairs (supplier keys are ints in any TPC-H-shaped
-    # corpus; 2^32 suppliers is far past the fixture contract).
+    # pack LOUD: an id outside the pack domain fails the job instead of
+    # silently aliasing pairs.  id_b fills the low 32 bits; id_a * 2^32
+    # must stay below 2^63, so id_a < 2^31 (supplier keys are ints in any
+    # TPC-H-shaped corpus; 2^31 suppliers is far past the fixture contract).
     pack = 1 << 32
     guard = (
-        f"assert_true(id_a >= 0 AND id_a < {pack} AND "
+        f"assert_true(id_a >= 0 AND id_a < {1 << 31} AND "
         f"id_b >= 0 AND id_b < {pack}, "
         f"'cosupply_edges: supplier id outside the 32-bit pack domain')"
     )

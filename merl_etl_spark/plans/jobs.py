@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -122,15 +122,25 @@ def ingest_transfers(
     """§3.1 incremental event ingestion: normalize → keyed dedup →
     anti-join append set → monotonic cursor advance (merlin_etl.py:346-479).
 
-    Returns (rows_to_append, merged_cursors)."""
-    normalized = (
-        raw.withColumn("wallet_address", S.lower_addr(F.col("wallet_address")))
-        .withColumn("contract_address", S.lower_addr(F.col("contract_address")))
-        .withColumn("from_address", S.lower_addr(F.col("from_address")))
-        .withColumn("to_address", S.lower_addr(F.col("to_address")))
-        .withColumn("block_time_utc", S.from_unix(F.col("block_time_unix")))
-        .withColumn("value_18d", S.scale_18d(F.col("value_raw")))
-        .withColumn("tx_index_key", F.coalesce(F.col("transaction_index"), F.lit(0)))
+    Returns (rows_to_append, merged_cursors).  The cursor is the max
+    ``block_number`` over every SCANNED row per stream, replays included,
+    as the reference's running ``max(blockNumber)`` is
+    (merlin_etl.py:435,463); ``last_page`` is the number of rows scanned,
+    not appended.  So ``merged_cursors`` reads only ``raw`` and
+    ``cursors`` — it never touches ``existing``, and it stays correct
+    when evaluated after ``rows_to_append`` has been written into the
+    table ``existing`` lists."""
+    # one projection: each chained withColumn is a separate analysis pass
+    normalized = raw.withColumns(
+        {
+            "wallet_address": S.lower_addr(F.col("wallet_address")),
+            "contract_address": S.lower_addr(F.col("contract_address")),
+            "from_address": S.lower_addr(F.col("from_address")),
+            "to_address": S.lower_addr(F.col("to_address")),
+            "block_time_utc": S.from_unix(F.col("block_time_unix")),
+            "value_18d": S.scale_18d(F.col("value_raw")),
+            "tx_index_key": F.coalesce(F.col("transaction_index"), F.lit(0)),
+        }
     )
     new_rows = insert_ignore(
         normalized,
@@ -141,7 +151,7 @@ def ingest_transfers(
         [F.col("block_number").asc(), F.col("ingested_at").asc()],
     ).drop("tx_index_key")
 
-    new_cursors = new_rows.groupBy(
+    new_cursors = normalized.groupBy(
         F.concat(
             F.lit("tokentx:"), F.col("wallet_address"), F.lit(":"), F.col("contract_address")
         ).alias("stream")
@@ -161,10 +171,22 @@ def activity_report(
 ) -> tuple[DataFrame, DataFrame]:
     """§3.3 hourly whale-activity report: 60-minute lookback → Top-100
     semi-join → per-wallet conditional flow → (totals rollup, top-10 movers
-    with rendered report columns) (scripts/ingest_activity_and_report.sh:20-126)."""
+    with rendered report columns) (scripts/ingest_activity_and_report.sh:20-126).
+
+    Runs ONE Spark query when called: ``per_wallet`` is evaluated once,
+    collected as Arrow and re-planned as a ``LocalRelation``.
+    Its size is bounded by the number of distinct wallets in ``top100``,
+    so ``totals``, ``movers`` and any rendering over them never scan
+    ``transfers`` again — they stay valid after ``transfers`` is gone.
+
+    No silent overflow (ANSI mode is off, so a ``decimal(38,18)`` sum past
+    10^20 tokens turns NULL): a NULL per-wallet flow raises
+    ``ArithmeticError`` here, and a NULL total over a non-empty hour
+    raises when ``totals`` is evaluated.  Only the empty hour totals 0."""
     token_l = token.lower()
     window_lo = F.lit(asof) - F.expr("INTERVAL 60 MINUTES")
-    wallets = top100.select(F.col("holder_address").alias("wallet_address")).distinct()
+    # a semi-join only asks whether a wallet is listed: no distinct needed
+    wallets = top100.select(F.col("holder_address").alias("wallet_address"))
     w = (
         transfers.filter(
             (F.col("contract_address") == token_l)
@@ -176,27 +198,42 @@ def activity_report(
         )
         .join(F.broadcast(wallets), "wallet_address", "left_semi")
     )
-    per_wallet = w.groupBy("wallet_address").agg(
+    dec = T.DecimalType(38, 18)
+    flows = w.groupBy("wallet_address").agg(
         F.sum(
             F.when(F.col("wallet_address") == F.col("to_address"), F.col("value_18d")).otherwise(
-                F.lit(0).cast(T.DecimalType(38, 18))
+                F.lit(0).cast(dec)
             )
-        ).cast(T.DecimalType(38, 18)).alias("in_amt"),
+        ).cast(dec).alias("in_amt"),
         F.sum(
             F.when(
                 F.col("wallet_address") == F.col("from_address"), F.col("value_18d")
-            ).otherwise(F.lit(0).cast(T.DecimalType(38, 18)))
-        ).cast(T.DecimalType(38, 18)).alias("out_amt"),
+            ).otherwise(F.lit(0).cast(dec))
+        ).cast(dec).alias("out_amt"),
         F.count("*").alias("txs"),
-    )
+    ).toArrow()
+    for c in ("in_amt", "out_amt"):
+        if flows.column(c).null_count:
+            raise ArithmeticError(
+                f"activity_report: a wallet's {c} is NULL — its decimal(38,18) "
+                "sum overflowed 10^20 tokens or a transfer value did not parse"
+            )
+    # one partition: totals and movers over ≤|top100| rows then need no exchange
+    per_wallet = transfers.sparkSession.createDataFrame(flows).coalesce(1)
+
+    n = F.count("*")
+
+    def total(c: str) -> Column:
+        s = F.sum(c)
+        overflow = F.raise_error(F.lit(f"activity_report: total of {c} overflows decimal(38,18)"))
+        return F.when(n == 0, F.lit(0)).when(s.isNull(), overflow).otherwise(s).cast(dec)
+
     totals = per_wallet.agg(
-        F.count("*").alias("active_wallets"),
+        n.alias("active_wallets"),
         F.coalesce(F.sum("txs"), F.lit(0)).cast("bigint").alias("tx_rows"),
-        F.coalesce(F.sum("in_amt"), F.lit(0)).cast(T.DecimalType(38, 18)).alias("total_in"),
-        F.coalesce(F.sum("out_amt"), F.lit(0)).cast(T.DecimalType(38, 18)).alias("total_out"),
-        (F.coalesce(F.sum("in_amt"), F.lit(0)) - F.coalesce(F.sum("out_amt"), F.lit(0)))
-        .cast(T.DecimalType(38, 18))
-        .alias("net"),
+        total("in_amt").alias("total_in"),
+        total("out_amt").alias("total_out"),
+        (total("in_amt") - total("out_amt")).cast(dec).alias("net"),
     )
     movers = (
         per_wallet.withColumn("max_flow", F.greatest("in_amt", "out_amt"))

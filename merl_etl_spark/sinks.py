@@ -42,9 +42,11 @@ def insert_ignore(batch: DataFrame, existing: DataFrame, keys: Sequence[str],
                   tie_break: Sequence[Column]) -> DataFrame:
     """Rows to append: in-batch dedup (first by ``tie_break``) then anti-join
     against the target on the conflict key — INSERT … ON CONFLICT DO NOTHING
-    (sink-insert-ignore-tx; merlin_etl.py:438-450, key schema.sql:123)."""
+    (sink-insert-ignore-tx; merlin_etl.py:438-450, key schema.sql:123).
+    An anti-join only asks whether a key exists, so ``existing`` needs no
+    distinct (which would cost a shuffle of the whole target)."""
     deduped = upsert_last_wins(batch, keys, tie_break)
-    return deduped.join(existing.select(*keys).distinct(), list(keys), "left_anti")
+    return deduped.join(existing.select(*keys), list(keys), "left_anti")
 
 
 def cursor_merge(*cursor_snapshots: DataFrame) -> DataFrame:

@@ -18,7 +18,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _SUBSET = "dedup-exact,agg-conditional-flow"
 
 
-def test_bench_last_stdout_line_is_compact_parseable_summary():
+def test_bench_last_stdout_line_is_compact_parseable_summary(tmp_path):
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
@@ -26,7 +26,7 @@ def test_bench_last_stdout_line_is_compact_parseable_summary():
         SPARK_GRAFT_CPUS="4",
     )
     out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py")],
+        [sys.executable, os.path.join(REPO, "bench.py"), "--out-dir", str(tmp_path)],
         capture_output=True,
         text=True,
         env=env,
@@ -53,6 +53,7 @@ def test_bench_last_stdout_line_is_compact_parseable_summary():
         assert set(d) == {"query", "sec"}
 
     # and the full detail landed in BENCH_DETAIL.json with ALL queries
-    with open(os.path.join(REPO, "BENCH_DETAIL.json")) as fh:
+    # (in tmp_path, so the run never rewrites the tracked detail records)
+    with open(tmp_path / "BENCH_DETAIL.json") as fh:
         detail = json.load(fh)
     assert set(detail["queries"]) == set(_SUBSET.split(","))

@@ -6,12 +6,15 @@ the properties the reference's unique keys / GREATEST merges guarantee.
 from __future__ import annotations
 
 import datetime as dt
+import shutil
 from decimal import Decimal
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from merl_etl_spark.plans.jobs import activity_report, derive_top100, ingest_transfers
+from merl_etl_spark.plans.reporting import render_activity_report
 from merl_etl_spark.sinks import cursor_merge, insert_ignore, snapshot_replace, upsert_last_wins
 from tests.fixtures import (
     ASOF,
@@ -149,6 +152,37 @@ def test_ingest_transfers_idempotent(spark, transfers):
     assert joined.count() == 0
 
 
+def test_cursors_are_the_scanned_max_after_the_append(spark, transfers, tmp_path):
+    """The cursor is the running max block over every SCANNED row per
+    stream (merlin_etl.py:435,463), replays included.  So it must not
+    depend on the target's file listing: evaluated after ``new_rows`` is
+    appended, or recomputed against a freshly listed target, it still
+    advances — also for a stream whose batch rows are all replays."""
+    path = str(tmp_path / "transfers")
+    pdf = transfers.toPandas()
+    pdf["stream"] = "tokentx:" + pdf.wallet_address.str.lower() + ":" + pdf.contract_address.str.lower()
+    # one stream is stored before the batch, so all its batch rows are replays
+    wallet, token = pdf.wallet_address.iloc[0], pdf.contract_address.iloc[0]
+    one_stream = transfers.filter((F.col("wallet_address") == wallet) & (F.col("contract_address") == token))
+    old = cursors_pdf()
+    cursors = spark.createDataFrame(old)
+    ingest_transfers(one_stream, transfers.limit(0), cursors)[0].write.parquet(path)
+
+    scanned = pdf.groupby("stream").block_number.agg(last_scanned_block="max", last_page="count")
+    cols = ["last_scanned_block", "last_page"]
+    merged_pdf = pd.concat([old.set_index("stream")[cols], scanned]).groupby(level=0).max()
+    want = {s: (int(b), int(n)) for s, b, n in merged_pdf.itertuples()}
+
+    def got(df):
+        return {r.stream: (r.last_scanned_block, r.last_page) for r in df.collect()}
+
+    new_rows, merged = ingest_transfers(transfers, spark.read.parquet(path), cursors)
+    new_rows.write.mode("append").parquet(path)
+    assert got(merged) == want
+    _, relisted = ingest_transfers(transfers, spark.read.parquet(path), cursors)
+    assert got(relisted) == want
+
+
 def test_cursor_merge_commutative_and_monotone(spark):
     c = spark.createDataFrame(cursors_pdf())
     a = c.filter("last_page = 5")
@@ -176,6 +210,61 @@ def test_activity_report(spark, holders, transfers):
     assert flows == sorted(flows, reverse=True)
     # rendered columns present
     assert all(r.wallet_link.startswith('<a href="') for r in m)
+
+
+def test_report_renders_without_the_transfers_table(spark, holders, transfers, tmp_path):
+    """activity_report evaluates the per-wallet flows once; totals, movers
+    and their rendering run over that local result, never over the table."""
+    path = str(tmp_path / "transfers")
+    transfers.write.parquet(path)
+    top = derive_top100(holders, TOKENS[0])
+    totals, movers = activity_report(spark.read.parquet(path), top, TOKENS[0], ASOF)
+    msg = render_activity_report(totals, movers, "MERL", str(ASOF))
+    shutil.rmtree(path)
+    assert render_activity_report(totals, movers, "MERL", str(ASOF)) == msg
+    assert "Top movers" in msg and "active wallets: 0" not in msg
+
+
+_FLOW_SCHEMA = (
+    "wallet_address string, contract_address string, block_time_utc timestamp, "
+    "from_address string, to_address string, value_18d decimal(38,18)"
+)
+
+
+def _inflows(spark, amounts: dict[str, list[str]]):
+    """In-window inbound transfers of ``TOKENS[0]``: wallet → token amounts."""
+    at = ASOF - dt.timedelta(minutes=5)
+    rows = [
+        (w, TOKENS[0], at, "0x" + "f" * 40, w, Decimal(a))
+        for w, amts in amounts.items()
+        for a in amts
+    ]
+    return spark.createDataFrame(rows, schema=_FLOW_SCHEMA)
+
+
+@pytest.mark.parametrize(
+    "amounts",
+    [
+        {"0xa": ["6e19", "6e19"]},  # one wallet's inflow passes 10^20 tokens
+        {"0xa": ["6e19"], "0xb": ["6e19"]},  # only the hour's total does
+    ],
+    ids=["per-wallet", "total"],
+)
+def test_report_overflow_raises_instead_of_printing_zero(spark, amounts):
+    """ANSI off turns a decimal(38,18) sum past 10^20 into NULL; the report
+    must fail loudly, not print 0.00 or NULL."""
+    top = spark.createDataFrame([(w,) for w in amounts], "holder_address string")
+    with pytest.raises(Exception, match="overflow"):
+        totals, movers = activity_report(_inflows(spark, amounts), top, TOKENS[0], ASOF)
+        render_activity_report(totals, movers, "MERL", str(ASOF))
+
+
+def test_report_empty_hour_totals_zero(spark):
+    top = spark.createDataFrame([("0xa",)], "holder_address string")
+    totals, movers = activity_report(_inflows(spark, {}), top, TOKENS[0], ASOF)
+    msg = render_activity_report(totals, movers, "MERL", str(ASOF))
+    assert "active wallets: 0 | txs: 0" in msg
+    assert "in: 0.00 | out: 0.00 | net: 0.00" in msg
 
 
 def test_snapshot_replace_no_stale_rows(spark, holders, tmp_path):

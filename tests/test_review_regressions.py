@@ -240,3 +240,25 @@ def test_trend_quantization_floors_pre_origin_deltas(spark):
         3: "0.000001",
         4: "0.000001",
     }, got
+
+
+def test_cosupply_pack_guard_at_the_sign_bit(spark, tmp_path):
+    """The census packs (id_a, id_b) as id_a * 2^32 + id_b in a long: an
+    id_a of 2^31 would wrap past 2^63 into a negative, aliased pair, so it
+    must fail the job, while 2^31 - 1 still packs and unpacks exactly."""
+    import pytest
+
+    from merl_etl_spark.operators.graph import cosupply_edges
+
+    def census(supp_keys):
+        sf = tmp_path / f"sf{min(supp_keys)}"
+        sf.mkdir()
+        spark.createDataFrame(
+            [(1, k) for k in supp_keys], "l_partkey long, l_suppkey long"
+        ).write.parquet(str(sf / "lineitem.parquet"))
+        return [tuple(r) for r in cosupply_edges(spark, str(sf)).collect()]
+
+    top = 1 << 31
+    assert census([top - 1, top]) == [(top - 1, top)]
+    with pytest.raises(Exception, match="32-bit pack domain"):
+        census([top, top + 1])

@@ -95,7 +95,7 @@ def main() -> None:
 
     results: dict[str, dict] = {}
 
-    def drive(name: str, label: str, want=None) -> None:
+    def drive(name: str, label: str) -> None:
         fn = QUERIES[name]
         mod = sys.modules[fn.__module__]
         lt = getattr(mod, "load_table", None)

@@ -22,14 +22,6 @@ def lower_addr(col: Column) -> Column:
     return F.lower(col)
 
 
-def pow_scale(raw: Column, decimals: Column | int) -> Column:
-    """Decimal rescale ``raw / power(10, decimals)`` (fn-pow-scale;
-    sql/top100_compute.sql:16).  Double-based: deterministic IEEE math; for
-    the exact fixed-scale variant see ``scale_18d``."""
-    d = F.lit(decimals) if isinstance(decimals, int) else decimals
-    return raw.cast("double") / F.pow(F.lit(10.0), d.cast("double"))
-
-
 def scale_18d(raw: Column) -> Column:
     """Exact fixed-scale variant: raw base units → 18-decimal human units
     as DECIMAL(38,18), mirroring the stored generated columns

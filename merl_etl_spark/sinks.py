@@ -90,9 +90,12 @@ def merge_into_parquet(
     table-format-free equivalent of Delta/Iceberg MERGE the reference's
     ON CONFLICT DO UPDATE maps to (merlin_etl.py:304-318).
 
-    With ``partition_cols``, only the partitions present in ``updates``
-    are read and rewritten (partition pruning on read, dynamic overwrite
-    on write) — at 100 TB a bucket-scoped upsert touches one partition.
+    It is the engine's one keyed upsert.  With ``partition_cols``,
+    only the partitions present in ``updates`` are rewritten (dynamic
+    overwrite); a NULL partition value is matched like any other.  The
+    read is NOT pruned: every partition of the target is scanned and a
+    broadcast left-semi join on the partition columns keeps the rows of
+    the touched ones.
     CONTRACT: every partition column must be functionally determined by
     the merge keys and immutable across versions of a key — an update
     that moves a key to a different partition would leave the stale row
@@ -130,8 +133,11 @@ def merge_into_parquet(
         target_exists = False
 
     if target_exists and partition_cols:
+        # null-safe: a NULL partition value names a partition too, and
+        # plain `=` would drop its untouched rows from the overwrite
         parts = updates.select(*partition_cols).distinct()
-        existing = target.join(F.broadcast(parts), list(partition_cols), "left_semi")
+        on = [target[c].eqNullSafe(parts[c]) for c in partition_cols]
+        existing = target.join(F.broadcast(parts), on, "left_semi")
     elif target_exists:
         existing = target
     else:

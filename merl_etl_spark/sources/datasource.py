@@ -1,7 +1,7 @@
 """Custom PySpark Data Sources for the reference's REST ingestion surface.
 
-``sources/paged.py`` proves the page-loop *mechanics* (retry, rate limit,
-field drift, short-page stop, cursor resume) as driver-edge helpers; this
+``sources/paged.py`` holds the page-loop *mechanics* (retry, rate limit,
+field drift, short-page stop, cursor resume) as plain Python; this
 module lifts them into first-class Spark sources via the Python Data
 Source API (pyspark.sql.datasource, Spark 4+), closing the "real source
 integration" gap (VERDICT r1 "What's missing" #2):
@@ -55,8 +55,6 @@ from typing import Any
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     EqualTo,
     GreaterThan,
     GreaterThanOrEqual,
@@ -65,7 +63,6 @@ from pyspark.sql.datasource import (
     LessThan,
     LessThanOrEqual,
     SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
 
 from merl_etl_spark.sources.paged import RateLimiter, paged_fetch
@@ -543,489 +540,15 @@ class BlockCursorStreamSource(DataSource):
 
 
 # ---------------------------------------------------------------------------
-# write path: last-wins upsert as a real df.write format
-# ---------------------------------------------------------------------------
-
-
-class StagedFile(WriterCommitMessage):
-    """One staged parquet part written by one task."""
-
-    def __init__(self, path: str, rows: int):
-        self.path, self.rows = path, rows
-
-
-def _spark_type_to_pa(t: Any):
-    # pyspark's own Arrow mapping (dates, binary, tz-aware timestamps,
-    # nested types) — no hand-rolled parallel table to keep in sync
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    return to_arrow_type(t)
-
-
-class UpsertParquetWriter(DataSourceWriter):
-    """Executor tasks stage their partition as parquet parts; the driver
-    commit merges all staged rows into the destination snapshot with
-    last-wins-by-key semantics and swaps it in atomically (os.replace).
-    A failed job aborts by deleting the staging directory — the snapshot
-    is never observed half-written (the reference's transactional
-    ``INSERT ... ON CONFLICT DO UPDATE``, re-expressed as
-    stage-merge-swap; merlin_etl.py:333-357, schema.sql:55-66).
-
-    Scale shape: the stage step is fully distributed (one part per task);
-    the MERGE runs driver-side in pyarrow, sized for the reference's
-    upsert targets — small derived tables (top100 snapshots, cursors,
-    holder sets).  For large fact-table upserts use the distributed
-    ``sinks.merge_into_parquet`` plan instead; this format trades merge
-    parallelism for a single-file snapshot a JDBC-style consumer can
-    swap-read.
-
-    REQUIRES a filesystem shared between driver and executors (executors
-    stage parts under ``<path>/_staging_*`` that the driver commit reads):
-    local mode, NFS, or a fuse-mounted object store.  On a cluster whose
-    executors only have node-local disks, point ``path`` at shared
-    storage or use ``sinks.merge_into_parquet``."""
-
-    def __init__(self, options: dict[str, str], schema, overwrite: bool):
-        import uuid
-
-        self.options = dict(options)
-        self.path = options["path"]
-        self.keys = [k for k in options.get("keys", "").split(",") if k]
-        if not self.keys and not overwrite:
-            raise ValueError("merl-upsert append mode requires a 'keys' option")
-        self.schema = schema
-        self.overwrite = overwrite
-        self.staging = f"{self.path}/_staging_{uuid.uuid4().hex}"
-
-    # -- executor side --
-
-    def write(self, iterator) -> StagedFile:
-        import os
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        names = self.schema.names
-        pa_schema = pa.schema(
-            [(f.name, _spark_type_to_pa(f.dataType)) for f in self.schema.fields]
-        )
-        cols: dict[str, list] = {n: [] for n in names}
-        n_rows = 0
-        for row in iterator:
-            for n in names:
-                cols[n].append(row[n])
-            n_rows += 1
-        os.makedirs(self.staging, exist_ok=True)
-        part = f"{self.staging}/part-{uuid.uuid4().hex}.parquet"
-        pq.write_table(pa.Table.from_pydict(cols, schema=pa_schema), part)
-        return StagedFile(part, n_rows)
-
-    # -- driver side --
-
-    def _snapshot(self) -> str:
-        return f"{self.path}/data.parquet"
-
-    def commit(self, messages) -> None:
-        import shutil
-
-        try:
-            self._commit(messages)
-        except BaseException:
-            # a failed commit must roll back like the reference's
-            # transaction: drop the staged batch, leave the snapshot as-is
-            shutil.rmtree(self.staging, ignore_errors=True)
-            raise
-
-    def _commit(self, messages) -> None:
-        import os
-        import shutil
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        staged = [pq.read_table(m.path) for m in messages if m is not None and m.rows]
-        incoming = (
-            pa.concat_tables(staged)
-            if staged
-            else pa.Table.from_pylist(
-                [], schema=pa.schema([(f.name, _spark_type_to_pa(f.dataType))
-                                      for f in self.schema.fields])
-            )
-        )
-        if self.keys:
-            import pyarrow.compute as pc
-
-            # the anti-join merge below never matches NULL keys, so a
-            # NULL-keyed row could neither be updated nor deduped —
-            # enforce the NOT NULL conflict-key contract loudly instead
-            # of accumulating NULL-key duplicates across commits
-            for k in self.keys:
-                if incoming.num_rows and pc.any(
-                    pc.is_null(incoming.column(k))
-                ).as_py():
-                    raise ValueError(
-                        f"merl-upsert key column {k!r} contains NULL — "
-                        f"conflict keys must be NOT NULL (a NULL key can "
-                        f"never match on replay, so last-wins semantics "
-                        f"would silently break)"
-                    )
-            # vectorized duplicate-key check: distinct key combos via a
-            # pyarrow group_by (no per-row .as_py() tuple materialization)
-            distinct_keys = incoming.select(self.keys).group_by(self.keys).aggregate([])
-            if distinct_keys.num_rows != incoming.num_rows:
-                raise ValueError(
-                    "merl-upsert batch contains duplicate keys — the reference's "
-                    "ON CONFLICT upsert requires key-unique batches"
-                )
-        # exclusive commit lock: concurrent read-merge-replace jobs would
-        # silently drop each other's batches (Postgres serialized this for
-        # the reference; an advisory flock serializes it here — single
-        # process-local FS only, a real lake would use a table format)
-        import fcntl
-
-        lock_fd = os.open(f"{self.path}/_upsert.lock", os.O_CREAT | os.O_RDWR)
-        try:
-            fcntl.flock(lock_fd, fcntl.LOCK_EX)
-            merged = incoming
-            if not self.overwrite and os.path.exists(self._snapshot()):
-                existing = pq.read_table(self._snapshot()).cast(incoming.schema)
-                # vectorized last-wins: existing rows whose key collides
-                # with the batch are dropped via a pyarrow hash anti-join
-                # (columnar; replaces the per-row Python tuple-set probe
-                # that dominated commit time on large snapshots).  NULL
-                # keys are rejected above, so "never matches NULL" can't
-                # leak duplicates.
-                retained = (
-                    existing.join(
-                        incoming.select(self.keys),
-                        keys=self.keys,
-                        join_type="left anti",
-                    )
-                    if existing.num_rows
-                    else existing
-                )
-                # join output column order follows the left table; select
-                # pins the exact incoming order for concat
-                merged = pa.concat_tables(
-                    [retained.select(incoming.schema.names), incoming]
-                )
-            if self.keys:
-                # acero's multi-threaded hash join emits rows in a
-                # nondeterministic order — sort by key so identical
-                # inputs always produce a byte-identical snapshot
-                # (replayed commits must be true no-ops on disk)
-                merged = merged.sort_by([(k, "ascending") for k in self.keys])
-            # tmp lives inside the underscore-hidden staging dir: invisible
-            # to readers, removed by any rollback; os.replace stays atomic
-            # (same filesystem)
-            tmp = f"{self.staging}/snapshot.tmp.parquet"
-            pq.write_table(merged, tmp)
-            os.replace(tmp, self._snapshot())  # atomic swap: never half-written
-        finally:
-            os.close(lock_fd)
-        shutil.rmtree(self.staging, ignore_errors=True)
-
-    def abort(self, messages) -> None:
-        import shutil
-
-        shutil.rmtree(self.staging, ignore_errors=True)
-
-
-class UpsertParquetDataSource(DataSource):
-    """``df.write.format("merl-upsert").option("keys", "k1,k2")`` —
-    see :class:`UpsertParquetWriter`."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "merl-upsert"
-
-    def writer(self, schema, overwrite: bool) -> UpsertParquetWriter:
-        return UpsertParquetWriter(self.options, schema, overwrite)
-
-
-
-
-# ---------------------------------------------------------------------------
-# merl-jsonlog: Python Data Source STREAMING writer (exactly-once sink)
-# ---------------------------------------------------------------------------
-
-
-class LoggedPart(WriterCommitMessage):
-    """One staged JSONL part written by one streaming task."""
-
-    def __init__(self, path: str, rows: int):
-        self.path, self.rows = path, rows
-
-
-class JsonLogStreamWriter(DataSourceStreamWriter):
-    """Streaming sink through the Python Data Source API: tasks stage
-    their micro-batch partition as JSON-lines parts; the driver commit
-    finalizes the batch by moving every staged part under
-    ``<path>/batch=<epochId>/`` — and SKIPS the move when that batch
-    directory already exists, which is what makes the sink exactly-once
-    under checkpoint loss or batch replay (the same replayed epochId
-    lands on the already-committed directory and is dropped whole).
-    ``abort`` deletes the staged parts, so a failed batch is never
-    observable.  The idempotence contract mirrors the reference's
-    ON CONFLICT DO NOTHING event inserts (schema.sql:123) at the
-    micro-batch granularity instead of the row granularity.
-
-    Ownership contract (ADVICE r6; marker added r8): the output path —
-    including its ``_staging`` subdir — belongs to exactly ONE streaming
-    query at a time; Spark's checkpoint lock enforces this for a given
-    checkpoint location, and pointing a second query (or a second
-    checkpoint) at the same path is misuse.  The sink defends the
-    contract two ways: a ``_staging/.owner`` marker claimed by the first
-    task of each batch cycle makes a SECOND concurrent writer fail fast
-    in ``write`` (and fences ``commit``: publishing requires the marker
-    to be this query's own), and ``commit`` raises if any part named in
-    a commit message is missing (e.g. swept by a foreign writer), so
-    Spark aborts and replays the batch rather than publishing it
-    incomplete.  The marker lives only between a batch's first staged
-    part and that batch's commit/abort sweep, so a clean shutdown never
-    leaves one behind; after a hard mid-batch crash a restart FROM THE
-    SAME CHECKPOINT re-derives the same token and walks through its own
-    stale marker, while any OTHER query fails closed with a message
-    naming the dir to remove — deliberate, since liveness of a foreign
-    owner cannot be probed portably (the HDFS-lease-recovery trade)."""
-
-    def __init__(self, options, run_id: str | None = None):
-        import os as _os
-
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("merl-jsonlog requires option('path', ...)")
-        # FIXED staging path — no per-instance uuid and NO init-time sweep:
-        # Spark re-instantiates the writer in a separate commit-runner
-        # process, so any state created in __init__ (or cleanup done here)
-        # must be identical across instances; an instance-scoped dir made
-        # the commit instance sweep the task instances' freshly staged
-        # parts (review r6c follow-up).  Orphan cleanup happens in
-        # commit(), after the batch is durably published.
-        self.staging = _os.path.join(self.path, "_staging")
-        # Per-query fencing token.  It must be DERIVED (never minted):
-        # the task path constructs this writer from class+options in the
-        # planning worker while the commit runner calls streamWriter on
-        # a separately-pickled DataSource instance, so generated state
-        # (uuid in __init__) diverges between the two.  The one identity
-        # both sides share is the options dict, and Spark injects the
-        # query's checkpoint location into it — whose own lock already
-        # guarantees one LIVE query per location, making it the natural
-        # fencing key: two concurrent queries necessarily differ, while
-        # a restart from the same checkpoint re-derives the same token
-        # and therefore walks through its own crash-leftover marker.
-        # Empty (no checkpoint option, no explicit run_id) = fencing off.
-        if run_id is None:
-            ckpt = options.get("checkpointlocation", "")
-            if ckpt:
-                import hashlib as _hashlib
-
-                run_id = _hashlib.md5(str(ckpt).encode()).hexdigest()
-            else:
-                run_id = ""
-        self.run_id = run_id
-        self.owner_label = options.get("owner", "")
-        self.marker = _os.path.join(self.staging, ".owner")
-
-    def _claim_or_verify_owner(self) -> None:
-        """Atomically claim the staging marker for this query, or raise
-        if another query's live marker holds the path.
-
-        The claim is full-content-atomic (review r8 finding: a bare
-        ``open('x')``-then-write exposes a zero-byte marker that a
-        concurrent reader — including a sibling task of the SAME query —
-        would misread as a foreign owner): the content is written to a
-        private temp file and ``os.link``-ed into place, which fails
-        with FileExistsError when a marker already exists (rename would
-        silently overwrite a live claim).  A reader therefore sees
-        either no marker or a complete one; an unparseable marker can
-        only be alien garbage and is reclaimed by replacement."""
-        import json as _json
-        import os as _os
-        import uuid as _uuid
-
-        if not self.run_id:  # fencing off (no checkpoint identity)
-            return
-        content = _json.dumps(
-            {"run_id": self.run_id, "owner": self.owner_label}
-        )
-        # Bounded claim loop (ADVICE r8): the vanished-marker and
-        # garbage-reclaim paths RETRY THE ATOMIC os.link rather than
-        # recursing unboundedly or os.replace-ing — a replace could
-        # clobber a competitor's freshly-linked VALID marker in the
-        # window between our failed link and the replace; unlink-the-
-        # garbage-then-relink can never overwrite a complete claim.
-        for _attempt in range(3):
-            tmp = f"{self.marker}.claim-{_uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                fh.write(content)
-            try:
-                _os.link(tmp, self.marker)  # atomic create-if-absent
-                return
-            except FileExistsError:
-                pass
-            finally:
-                try:
-                    _os.unlink(tmp)
-                except OSError:
-                    pass
-            try:
-                with open(self.marker) as fh:
-                    held = _json.load(fh)
-            except OSError:
-                # marker vanished between link-failure and read: the
-                # owner committed/aborted concurrently — retry the claim
-                continue
-            except ValueError:
-                # unparseable marker = garbage (claims are content-atomic
-                # now, so this cannot be a mid-write of a live owner);
-                # unlink it and retry the atomic claim
-                try:
-                    _os.unlink(self.marker)
-                except OSError:
-                    pass
-                continue
-            if held.get("run_id") != self.run_id:
-                raise RuntimeError(
-                    f"merl-jsonlog: output path {self.path!r} is owned by "
-                    f"another streaming query (marker {self.marker} holds "
-                    f"run_id={held.get('run_id')!r} owner="
-                    f"{held.get('owner')!r}); refusing to write.  If the "
-                    "previous owner crashed mid-batch, remove the _staging "
-                    "dir after confirming it is no longer live."
-                )
-            return  # marker is our own (a sibling task claimed it)
-        raise RuntimeError(
-            f"merl-jsonlog: could not claim ownership marker "
-            f"{self.marker} after 3 attempts (pathological marker "
-            "churn — concurrent claimants appearing and vanishing); "
-            "refusing to write."
-        )
-
-    def _owns_marker(self) -> bool:
-        """True when the marker is this query's own or absent (absent =
-        nothing live is staged; fencing applies only between a batch's
-        first write and its commit)."""
-        import json as _json
-
-        if not self.run_id:  # fencing off (no checkpoint identity)
-            return True
-        try:
-            with open(self.marker) as fh:
-                return _json.load(fh).get("run_id") == self.run_id
-        except OSError:
-            return True
-        except ValueError:
-            # claims are content-atomic (temp + link), so an unparseable
-            # marker is garbage, not a live owner's mid-write — treat as
-            # unowned so our own cleanup/publish is not wedged
-            return True
-
-    def write(self, iterator):
-        import json as _json
-        import os as _os
-        import uuid as _uuid
-
-        _os.makedirs(self.staging, exist_ok=True)
-        # fail fast BEFORE staging any bytes when a second live writer
-        # holds the path (concurrent tasks of the SAME query all claim
-        # the same run_id, so only a foreign query trips this)
-        self._claim_or_verify_owner()
-        part = _os.path.join(self.staging, f"part-{_uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(part, "w") as fh:
-            for row in iterator:
-                fh.write(_json.dumps(row.asDict(), default=str) + "\n")
-                n += 1
-        return LoggedPart(part, n)
-
-    def commit(self, messages, batchId) -> None:
-        """Finalize atomically: assemble the batch in a temp dir, then ONE
-        os.rename publishes it.  A crash at any point leaves either no
-        batch dir (replay re-stages and re-commits everything) or the
-        complete one (replay is absorbed) — never a partial batch that a
-        replay would mistake for durable (review r6c finding: the earlier
-        makedirs-then-move-parts sequence lost rows if the driver died
-        mid-move and the replay saw the half-full dir)."""
-        import os as _os
-        import shutil as _shutil
-
-        batch_dir = _os.path.join(self.path, f"batch={batchId}")
-        if not self._owns_marker():
-            # fenced out: a newer query claimed the path between this
-            # query's staging and its commit — neither publish nor sweep
-            # (the staging contents now belong to the new owner)
-            raise RuntimeError(
-                f"merl-jsonlog batch {batchId}: ownership marker "
-                f"{self.marker} is no longer this query's own — another "
-                "writer claimed the path; refusing to publish or sweep "
-                "(single-writer ownership contract)"
-            )
-        if not _os.path.isdir(batch_dir):
-            # Every commit message MUST have its staged part on disk: a
-            # missing part means the staging dir was disturbed (a second
-            # writer on the same path, manual cleanup) and publishing
-            # would silently lose that partition's rows under the sink's
-            # own exactly-once contract.  Raise so Spark fails/replays
-            # the batch instead (ADVICE r6 — was a silent skip).
-            lost = [m.path for m in messages if m and not _os.path.exists(m.path)]
-            if lost:
-                raise RuntimeError(
-                    f"merl-jsonlog batch {batchId}: {len(lost)} staged part(s) "
-                    f"named in commit messages are missing (first: {lost[0]}); "
-                    "the staging dir was disturbed — refusing to publish an "
-                    "incomplete batch (single-writer ownership contract)"
-                )
-            tmp = batch_dir + ".inprogress"
-            _shutil.rmtree(tmp, ignore_errors=True)
-            _os.makedirs(tmp)
-            for i, m in enumerate(messages):
-                if m:
-                    _os.replace(m.path, _os.path.join(tmp, f"part-{i:05d}.jsonl"))
-            _os.rename(tmp, batch_dir)  # the atomic publish
-        # replayed epoch or success: anything still in staging is garbage —
-        # parts from failed/speculative tasks the driver never heard about,
-        # or a replay's re-staged copies.  Batches execute sequentially, so
-        # nothing live can be staging here.
-        _shutil.rmtree(self.staging, ignore_errors=True)
-
-    def abort(self, messages, batchId) -> None:
-        import shutil as _shutil
-
-        # sweep only what is ours: when a newer writer has claimed the
-        # path, the staging contents are its live parts, not our garbage
-        if self._owns_marker():
-            _shutil.rmtree(self.staging, ignore_errors=True)
-
-
-class JsonLogStreamDataSource(DataSource):
-    """``df.writeStream.format("merl-jsonlog").option("path", ...)`` —
-    see :class:`JsonLogStreamWriter`.  Optional ``option("owner", ...)``
-    labels the ownership marker for diagnostics."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "merl-jsonlog"
-
-    def streamWriter(self, schema, overwrite):
-        # the writer derives its fencing token from the checkpoint
-        # location in options — the only identity shared by the
-        # task-path instance (constructed fresh from class+options in
-        # the planning worker) and the commit-runner instance
-        # (streamWriter on a separately-pickled DataSource)
-        return JsonLogStreamWriter(self.options)
-
-
-# ---------------------------------------------------------------------------
 # registration
 # ---------------------------------------------------------------------------
 
 
 def register_sources(spark) -> None:
-    """Register both formats on ``spark``, forcing by-value pickling of
-    this module (and the ``paged`` helpers it reuses) so executors never
-    need the package importable."""
+    """Register both formats (``merl-paged``, ``merl-blockcursor``) on
+    ``spark``, forcing by-value pickling of this module (and the
+    ``paged`` helpers it reuses) so executors never need the package
+    importable."""
     import sys
 
     from pyspark import cloudpickle
@@ -1036,8 +559,6 @@ def register_sources(spark) -> None:
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(PagedExplorerDataSource)
     spark.dataSource.register(BlockCursorStreamSource)
-    spark.dataSource.register(UpsertParquetDataSource)
-    spark.dataSource.register(JsonLogStreamDataSource)
 
 
 # ---------------------------------------------------------------------------

@@ -1,29 +1,26 @@
-"""Paged-source ingestion adapter (SURVEY.md §2.A) — the driver-edge
-simulation of the reference's REST ingestion loop.
+"""Paged-source ingestion loop (SURVEY.md §2.A) — the reference's REST
+page loop as plain Python.
 
 The reference pulls pages from an explorer API with retry/backoff
 (merlin_etl.py:61-75), a token-interval rate limiter (:77-84), tolerant
 field extraction across explorer variants (:276-289), a resumable
 block-range cursor (:353-357), and stops on a short page (:327-329,
-466-468).  In a Spark engine that loop lives at the driver edge: it
-produces batches that become DataFrames; everything downstream (dedup,
-upsert, derivation) is the distributed plan.  Here the "API" is a fixture
-iterator so tests exercise the exact loop mechanics — pagination, rate
-limiting, retries, field drift, short-page termination, cursor resume —
-with no network.
+466-468).  Here that loop is a plain iterator over a page function, so
+tests exercise the exact loop mechanics — pagination, rate limiting,
+retries, field drift, short-page termination, cursor resume — with no
+network.
 
-At scale this adapter is replaced by a real source (Kafka / file stream /
-custom DataSource); the page loop maps to micro-batches and the cursor to
-checkpoint offsets (see streaming/pipeline.py).
+The one Spark path that drains it is the ``merl-paged`` Data Source
+(sources/datasource.py): each executor task runs ``paged_fetch`` over its
+page range, and everything downstream (dedup, upsert, derivation) is the
+distributed plan.
 """
 
 from __future__ import annotations
 
 import time
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, SparkSession
 
 # candidate field names across "explorer variants" (src-field-drift,
 # merlin_etl.py:276-285 probes TokenHolderAddress/holderAddress/address…)
@@ -107,32 +104,3 @@ def paged_fetch(
         if len(items) < page_size:
             break
 
-
-def ingest_pages_to_df(
-    spark: SparkSession,
-    page_fn: Callable[[int, int], list[dict]],
-    schema: str,
-    columns: Sequence[str],
-    page_size: int = 100,
-    max_pages: int = 10_000,
-    start_page: int = 1,
-    rate_limiter: RateLimiter | None = None,
-    sleep: Callable[[float], None] = time.sleep,
-) -> tuple[DataFrame, dict]:
-    """Drain the page loop into one DataFrame + job stats (the §3.1 shape:
-    rows/pages counters and the running max cursor live in stats; keyed
-    dedup and anti-join append happen downstream in plans.ingest_transfers)."""
-    all_rows: list[tuple] = []
-    pages = 0
-    for _page, rows in paged_fetch(
-        page_fn,
-        page_size=page_size,
-        max_pages=max_pages,
-        start_page=start_page,
-        rate_limiter=rate_limiter,
-        sleep=sleep,
-    ):
-        pages += 1
-        all_rows.extend(tuple(r.get(c) for c in columns) for r in rows)
-    df = spark.createDataFrame(all_rows, schema=schema)
-    return df, {"pages": pages, "rows": len(all_rows)}

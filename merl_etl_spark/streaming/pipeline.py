@@ -11,12 +11,12 @@ Structured Streaming gives each a first-class equivalent:
 | reference behavior        | streaming form here                          |
 |---------------------------|----------------------------------------------|
 | cursor resume / GREATEST  | checkpointLocation offsets (monotone by
-|                           | construction) + foreachBatch cursor table    |
+|                           | construction)                                |
 | 6h tumbling snapshot      | window(ts, '6 hours') agg + watermark        |
 | 60m sliding lookback      | window(ts, '60m', '15m') agg + watermark     |
 | keyed replay dedup        | withWatermark + dropDuplicates(keys)         |
 | single-writer flock       | one streaming query per checkpoint dir       |
-| job audit rows            | foreachBatch audit append per micro-batch    |
+| job audit rows            | sinks.run_with_audit + observe_stats         |
 
 Everything uses ``Trigger.AvailableNow``-style processing (process all
 available input, then stop) — the exact semantics of the reference's cron
@@ -301,50 +301,6 @@ def run_top100_maintenance(
 
     return (
         holders_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def run_ingestion_job(
-    spark: SparkSession,
-    events: DataFrame,
-    checkpoint_dir: str,
-    output_dir: str,
-    cursor_accumulator: list,
-    audit_accumulator: list,
-) -> StreamingQuery:
-    """The §3.1 ingestion job as a streaming query: per micro-batch —
-    append new rows to the target, advance per-stream cursors (max block,
-    GREATEST-merged by construction since maxes only grow), and write a
-    job_runs-style audit record (stream-audit).
-
-    The checkpoint directory IS the ingestion_cursors table of the
-    reference: offsets only move forward, and a crashed job resumes from
-    the last committed batch (stream-monotonic-watermark /
-    stream-cursor-resume)."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.count()
-        # foreachBatch is at-least-once: a crash between write and
-        # checkpoint commit re-runs the batch.  Writing each batch to its
-        # own subdirectory with overwrite makes the replay idempotent
-        # (the re-run replaces its own partial output instead of
-        # appending duplicates).
-        batch_df.write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
-        cursors = (
-            batch_df.groupBy(F.col("user_id").alias("stream"))
-            .agg(F.max("event_id").alias("last_scanned_block"), F.count("*").alias("last_page"))
-            .collect()
-        )
-        cursor_accumulator.append({r.stream: r.last_scanned_block for r in cursors})
-        audit_accumulator.append(
-            {"batch_id": batch_id, "rows": rows, "status": "success"}
-        )
-
-    return (
-        events.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -69,76 +69,3 @@ def running_flow_stream(events: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-# ---------------------------------------------------------------------------
-# Spark 4.x twin: the same running-flow operator on the
-# transformWithStateInPandas API (StatefulProcessor + typed ValueState).
-# Semantics are identical to running_flow_stream — one snapshot row per
-# (key, micro-batch) with cumulative totals — so the stream-batch parity
-# test drives both through the same assertion.  The newer API is the
-# forward path: it adds timers, per-state TTL, and multiple independent
-# state variables per key (here a single ValueState suffices; a session
-# TTL would be one extra getValueState(..., ttlDurationMs=...) call).
-# ---------------------------------------------------------------------------
-
-
-def _tws_processor_cls():
-    # lazy bind: importing this module never requires the 4.x API to exist
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class RunningFlowProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._flow = handle.getValueState("flow", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            in_amt, out_amt, n_events, last_block = (
-                self._flow.get() if self._flow.exists() else (0.0, 0.0, 0, -1)
-            )
-            for pdf in rows:
-                purchases = pdf[pdf["event_type"] == "purchase"]["value"]
-                errors = pdf[pdf["event_type"] == "error"]["value"]
-                in_amt += float(purchases.sum())
-                out_amt += float(errors.sum())
-                n_events += int(len(pdf))
-                if len(pdf):
-                    last_block = max(last_block, int(pdf["event_id"].max()))
-            self._flow.update((in_amt, out_amt, n_events, last_block))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "in_amt": [in_amt],
-                    "out_amt": [out_amt],
-                    "n_events": [n_events],
-                    "last_block": [last_block],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningFlowProcessor
-
-
-def running_flow_stream_tws(events: DataFrame) -> DataFrame:
-    """``running_flow_stream`` on ``transformWithStateInPandas``.  Raises
-    AttributeError at call time on a Spark without the API (callers/tests
-    skip then) — module import stays 3.x-safe.
-
-    Runtime gate (this container): TWS talks to its per-partition state
-    server over a protobuf protocol; without ``google.protobuf`` the
-    driver-side runner exits -2 with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE /
-    ``ImportError: cannot import name 'descriptor' from 'google.protobuf'``
-    during validateAndMaybeEvolveStateSchema — before any batch runs.
-    The parity test skips on that exact condition; on a protobuf-enabled
-    cluster it drives this twin through the identical stream-batch
-    assertion as the applyInPandasWithState operator.  TWS also requires
-    the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``)."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_tws_processor_cls()(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )

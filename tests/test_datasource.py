@@ -4,7 +4,6 @@ block-cursor source (offset checkpointing, exactly-once resume)."""
 
 from __future__ import annotations
 
-import os
 import time
 
 import pytest
@@ -279,76 +278,6 @@ def _drain(spark, out, ckpt, head, expected, blocks_per_batch=7):
     return spark.read.parquet(out)
 
 
-def test_upsert_writer_merge_replay_overwrite(spark, tmp_path):
-    """df.write.format('merl-upsert'): last-wins merge by key, idempotent
-    replay, overwrite snapshot replace — the reference's ON CONFLICT
-    upsert as a real Spark write format."""
-    dest = str(tmp_path / "top100")
-    os.makedirs(dest)
-    df1 = spark.createDataFrame(
-        [("0xa", 1, "100"), ("0xb", 2, "90"), ("0xc", 3, "80")],
-        "addr string, rnk long, bal string",
-    )
-    df1.write.format("merl-upsert").option("keys", "addr").mode("append").save(dest)
-    assert spark.read.parquet(dest).count() == 3
-    df2 = spark.createDataFrame(
-        [("0xb", 1, "999"), ("0xd", 4, "70")], "addr string, rnk long, bal string"
-    )
-    for _ in range(2):  # second write is an exact replay -> no-op
-        df2.write.format("merl-upsert").option("keys", "addr").mode("append").save(dest)
-        got = {r.addr: (r.rnk, r.bal) for r in spark.read.parquet(dest).collect()}
-        assert got == {
-            "0xa": (1, "100"), "0xb": (1, "999"), "0xc": (3, "80"), "0xd": (4, "70")
-        }
-    df1.write.format("merl-upsert").option("keys", "addr").mode("overwrite").save(dest)
-    assert spark.read.parquet(dest).count() == 3
-    # no staging residue visible to readers
-    assert not [p for p in os.listdir(dest) if p.startswith("_staging")]
-
-
-def test_upsert_writer_rejects_duplicate_key_batch(spark, tmp_path):
-    dest = str(tmp_path / "dup")
-    os.makedirs(dest)
-    bad = spark.createDataFrame(
-        [("0xz", 1, "1"), ("0xz", 2, "2")], "addr string, rnk long, bal string"
-    )
-    with pytest.raises(Exception, match="duplicate keys"):
-        bad.write.format("merl-upsert").option("keys", "addr").mode("append").save(dest)
-    # failed commit rolled back: no staging residue, no snapshot
-    assert not [p for p in os.listdir(dest) if p.startswith("_staging")]
-    assert not os.path.exists(os.path.join(dest, "data.parquet"))
-
-
-def test_upsert_writer_concurrent_jobs_both_land(spark, tmp_path):
-    """Two simultaneous upsert jobs to one destination: the commit lock
-    serializes read-merge-swap, so neither batch is lost."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    dest = str(tmp_path / "conc")
-    os.makedirs(dest)
-
-    def write(rows):
-        spark.createDataFrame(rows, "k string, v long").write.format(
-            "merl-upsert"
-        ).option("keys", "k").mode("append").save(dest)
-
-    a = [(f"a{i}", i) for i in range(20)]
-    b = [(f"b{i}", i) for i in range(20)]
-    with ThreadPoolExecutor(2) as ex:
-        for f in [ex.submit(write, a), ex.submit(write, b)]:
-            f.result()
-    got = {r.k for r in spark.read.parquet(dest).collect()}
-    assert got == {k for k, _ in a} | {k for k, _ in b}
-
-
-def test_upsert_writer_append_requires_keys(spark, tmp_path):
-    dest = str(tmp_path / "nokeys")
-    os.makedirs(dest)
-    df = spark.createDataFrame([("a", 1)], "k string, v long")
-    with pytest.raises(Exception, match="requires a 'keys' option"):
-        df.write.format("merl-upsert").mode("append").save(dest)
-
-
 def test_stream_cursor_checkpoint_resume_exactly_once(spark, tmp_path):
     """The reference's block cursor as a Spark offset: restart after the
     head advances must deliver ONLY blocks past the committed offset —
@@ -467,61 +396,6 @@ def test_blockcursor_reader_validates_options():
         BlockCursorStreamReader({"blocks_per_batch": "0"})
 
 
-def test_upsert_commit_merges_large_snapshot_vectorized(tmp_path):
-    """1M-row snapshot merge through the driver commit path (VERDICT r4
-    task #6): the pyarrow anti-join merge must stay correct at real
-    snapshot sizes and stay ~0.1s where the old per-row tuple-set probe
-    measured 4.7s (46x).  Drives UpsertParquetWriter.commit directly
-    with pre-staged parts — the executor write path is covered elsewhere."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import types as T
-
-    from merl_etl_spark.sources.datasource import StagedFile, UpsertParquetWriter
-
-    dest = str(tmp_path / "big")
-    os.makedirs(dest)
-    schema = T.StructType(
-        [
-            T.StructField("addr", T.StringType()),
-            T.StructField("bal", T.LongType()),
-        ]
-    )
-
-    def staged_part(writer, addrs, bals):
-        os.makedirs(writer.staging, exist_ok=True)
-        part = f"{writer.staging}/part-test.parquet"
-        pq.write_table(pa.table({"addr": addrs, "bal": bals}), part)
-        return StagedFile(part, len(addrs))
-
-    n = 1_000_000
-    base = UpsertParquetWriter({"path": dest, "keys": "addr"}, schema, overwrite=False)
-    base.commit([staged_part(base, [f"0x{i:08x}" for i in range(n)], list(range(n)))])
-
-    # second batch: 100k overlapping keys (new values) + 50k new keys
-    upd = UpsertParquetWriter({"path": dest, "keys": "addr"}, schema, overwrite=False)
-    addrs = [f"0x{i:08x}" for i in range(0, 200_000, 2)] + [
-        f"0xnew{i:06x}" for i in range(50_000)
-    ]
-    bals = [-1] * 100_000 + [-2] * 50_000
-    t0 = time.monotonic()
-    upd.commit([staged_part(upd, addrs, bals)])
-    elapsed = time.monotonic() - t0
-
-    out = pq.read_table(f"{dest}/data.parquet")
-    assert out.num_rows == n + 50_000
-    import pyarrow.compute as pc
-
-    assert pc.sum(pc.equal(out.column("bal"), -1)).as_py() == 100_000
-    assert pc.sum(pc.equal(out.column("bal"), -2)).as_py() == 50_000
-    # updated keys appear exactly once (no duplicate survivors)
-    assert pc.count_distinct(out.column("addr")).as_py() == out.num_rows
-    # generous bound: the vectorized anti-join merge of 1M+150k rows
-    # measures ~0.1s (46x over the old 4.7s per-row tuple probe); 20s
-    # catches a regression back to per-row without being load-flaky
-    assert elapsed < 20, f"commit took {elapsed:.1f}s — merge has degraded"
-
-
 def test_parse_explorer_payload_missing_status_error_body_raises():
     """Proxy/JSON-RPC error bodies carry NO status field — they must
     raise into retry, not read as a terminal empty page (review r5)."""
@@ -541,59 +415,3 @@ def test_blockcursor_schema_path_validates_options():
     src = BlockCursorStreamSource({"transport": "fixture", "columns": "user_id"})
     with pytest.raises(ValueError, match="'path'"):
         src.schema()
-
-
-def test_upsert_rejects_null_keys(tmp_path):
-    """NULL conflict keys can never match in the anti-join merge, so
-    replays would accumulate NULL-key duplicates — rejected loudly."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import types as T
-
-    from merl_etl_spark.sources.datasource import StagedFile, UpsertParquetWriter
-
-    dest = str(tmp_path / "nullkey")
-    os.makedirs(dest)
-    schema = T.StructType(
-        [T.StructField("addr", T.StringType()), T.StructField("bal", T.LongType())]
-    )
-    w = UpsertParquetWriter({"path": dest, "keys": "addr"}, schema, overwrite=False)
-    os.makedirs(w.staging, exist_ok=True)
-    part = f"{w.staging}/part-null.parquet"
-    pq.write_table(pa.table({"addr": ["0xa", None], "bal": [1, 2]}), part)
-    with pytest.raises(ValueError, match="NULL"):
-        w.commit([StagedFile(part, 2)])
-    # rollback: no snapshot written, no staging residue
-    assert not os.path.exists(f"{dest}/data.parquet")
-    assert not [p for p in os.listdir(dest) if p.startswith("_staging")]
-
-
-def test_upsert_replayed_commit_is_byte_identical(tmp_path):
-    """Key-sorted snapshot writes: an exactly-replayed merge must produce
-    a byte-identical data.parquet (acero's hash join alone emits rows in
-    a thread-dependent order)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import types as T
-
-    from merl_etl_spark.sources.datasource import StagedFile, UpsertParquetWriter
-
-    dest = str(tmp_path / "determ")
-    os.makedirs(dest)
-    schema = T.StructType(
-        [T.StructField("addr", T.StringType()), T.StructField("bal", T.LongType())]
-    )
-
-    def commit(addrs, bals):
-        w = UpsertParquetWriter({"path": dest, "keys": "addr"}, schema, overwrite=False)
-        os.makedirs(w.staging, exist_ok=True)
-        part = f"{w.staging}/p.parquet"
-        pq.write_table(pa.table({"addr": addrs, "bal": bals}), part)
-        w.commit([StagedFile(part, len(addrs))])
-        with open(f"{dest}/data.parquet", "rb") as f:
-            return f.read()
-
-    commit([f"0x{i:04x}" for i in range(500)], list(range(500)))
-    first = commit([f"0x{i:04x}" for i in range(0, 100, 2)], [-1] * 50)
-    replay = commit([f"0x{i:04x}" for i in range(0, 100, 2)], [-1] * 50)
-    assert first == replay

@@ -15,7 +15,6 @@ from merl_etl_spark.sources.paged import (
     RateLimiter,
     extract_fields,
     fetch_with_retry,
-    ingest_pages_to_df,
     paged_fetch,
 )
 from tests.fixtures import ASOF, HOLDERS_SPARK_SCHEMA, TOKENS, TRANSFER_SPARK_SCHEMA, holders_pdf, transfers_pdf
@@ -89,21 +88,6 @@ def test_rate_limiter_spacing():
     rl.acquire()  # must wait 0.5
     rl.acquire()
     assert sleeps == pytest.approx([0.5, 0.5])
-
-
-def test_ingest_pages_to_df(spark):
-    items = [{"holderAddress": f"0x{i:040x}", "quantity": str(10**18 * (i + 1))} for i in range(130)]
-    page_fn, _ = _page_fn_from(items, fail_pages={2})  # page 2 fails once, retry succeeds
-    df, stats = ingest_pages_to_df(
-        spark,
-        page_fn,
-        schema="holder_address string, quantity_raw string",
-        columns=["holder_address", "quantity_raw"],
-        page_size=100,
-        sleep=lambda s: None,
-    )
-    assert stats == {"pages": 2, "rows": 130}
-    assert df.count() == 130
 
 
 def test_render_report_and_notifier(spark):

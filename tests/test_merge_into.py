@@ -84,3 +84,31 @@ def test_merge_staging_cleaned_and_wrecked_dir_self_heals(spark, tmp_path):
         spark, wrecked, _cursors(spark, [("x", 9, 1)]), ["stream"], _order()
     )
     assert {r.stream for r in spark.read.parquet(wrecked).collect()} == {"x"}
+
+
+def test_merge_partitioned_keeps_rows_of_a_null_partition(spark, tmp_path):
+    """A NULL partition value is a partition like any other: the rows of
+    the NULL partition that the update does not name must survive the
+    dynamic overwrite of that partition."""
+    path = str(tmp_path / "holders")
+    schema = "token string, holder string, qty long, updated long"
+    merge_into_parquet(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(None, "h1", 100, 1), (None, "h2", 200, 1), ("t", "h9", 900, 1)], schema
+        ),
+        ["token", "holder"],
+        [F.col("updated").desc()],
+        ["token"],
+    )
+    merge_into_parquet(
+        spark,
+        path,
+        spark.createDataFrame([(None, "h1", 150, 2)], schema),
+        ["token", "holder"],
+        [F.col("updated").desc()],
+        ["token"],
+    )
+    got = {(r.token, r.holder): r.qty for r in spark.read.parquet(path).collect()}
+    assert got == {(None, "h1"): 150, (None, "h2"): 200, ("t", "h9"): 900}

@@ -1,9 +1,6 @@
-"""The custom stateful operators must converge to the batch answer: after
+"""The custom stateful operator must converge to the batch answer: after
 processing the whole stream, each wallet's running totals equal a plain
-batch aggregation.  Both keyed-state APIs are driven through the same
-assertion — ``applyInPandasWithState`` (the 3.x-era operator) and its
-Spark 4.x twin on ``transformWithStateInPandas`` (StatefulProcessor +
-typed ValueState)."""
+batch aggregation."""
 
 from __future__ import annotations
 
@@ -13,18 +10,15 @@ from pyspark.sql import functions as F
 from merl_etl_spark.pyfiles import ensure_package_on_workers
 from merl_etl_spark.sources.tables import load_table
 from merl_etl_spark.streaming.pipeline import stream_events
-from merl_etl_spark.streaming.stateful import (
-    running_flow_stream,
-    running_flow_stream_tws,
-)
+from merl_etl_spark.streaming.stateful import running_flow_stream
 
 
-def _assert_flow_matches_batch(spark, sf_dir, op, table_name):
+def test_running_flow_state_matches_batch(spark, sf_dir):
     ensure_package_on_workers(spark)
     out = (
-        op(stream_events(spark, sf_dir))
+        running_flow_stream(stream_events(spark, sf_dir))
         .writeStream.format("memory")
-        .queryName(table_name)
+        .queryName("flow_state")
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
@@ -33,7 +27,7 @@ def _assert_flow_matches_batch(spark, sf_dir, op, table_name):
     # last snapshot per user = final state
     from pyspark.sql import Window
 
-    snaps = spark.table(table_name)
+    snaps = spark.table("flow_state")
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     final = (
         snaps.withColumn("rn", F.row_number().over(w)).filter("rn = 1").drop("rn")
@@ -58,31 +52,3 @@ def _assert_flow_matches_batch(spark, sf_dir, op, table_name):
         assert fs.n_events == fb.n_events and fs.last_block == fb.last_block
         assert fs.in_amt == pytest.approx(fb.in_amt, rel=1e-9)
         assert fs.out_amt == pytest.approx(fb.out_amt, rel=1e-9)
-
-
-def test_running_flow_state_matches_batch(spark, sf_dir):
-    _assert_flow_matches_batch(spark, sf_dir, running_flow_stream, "flow_state")
-
-
-def test_running_flow_tws_matches_batch(spark, sf_dir):
-    """Same operator, Spark 4.x transformWithStateInPandas API.  Skips
-    (documented fallback) when the runtime gates the API: the TWS
-    state-server protocol is protobuf-based, and on an env without
-    ``google.protobuf`` the driver-side runner dies with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE before the first
-    batch (verified by minimal repro; see running_flow_stream_tws
-    docstring).  applyInPandasWithState remains the env-portable path."""
-    from pyspark.sql.group import GroupedData
-
-    if not hasattr(GroupedData, "transformWithStateInPandas"):
-        pytest.skip("transformWithStateInPandas unavailable on this Spark")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "transformWithStateInPandas gated: its state-server protocol "
-            "requires google.protobuf, absent in this environment"
-        )
-    _assert_flow_matches_batch(
-        spark, sf_dir, running_flow_stream_tws, "flow_state_tws"
-    )

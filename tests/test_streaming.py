@@ -1,6 +1,7 @@
 """Structured Streaming tests: stream results must equal the batch twins
-(stream-batch parity), checkpoints must make re-runs no-ops (the cursor
-semantics), and watermark dedup must absorb replays."""
+(stream-batch parity), and watermark dedup must absorb replays.  Checkpoint
+resume (the cursor semantics) is checked on the merl-blockcursor source in
+test_datasource.py."""
 
 from __future__ import annotations
 
@@ -11,7 +12,6 @@ from merl_etl_spark.registry import QUERIES, load_all
 from merl_etl_spark.streaming.pipeline import (
     dedup_stream,
     dq_gate_stream,
-    run_ingestion_job,
     sliding_60m_stream,
     stream_events,
     tumbling_6h_stream,
@@ -61,29 +61,6 @@ def test_dedup_stream_absorbs_replays(spark, sf_dir):
     assert out.groupBy("event_id", "user_id", "event_type").count().filter(
         "count > 1"
     ).count() == 0
-
-
-def test_ingestion_job_checkpoint_resume(spark, sf_dir, tmp_path):
-    """First run ingests everything; a second run over the same source with
-    the same checkpoint ingests NOTHING (offsets are the cursor —
-    stream-cursor-resume) and cursors never move backward."""
-    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
-    cursors: list = []
-    audits: list = []
-    q = run_ingestion_job(spark, stream_events(spark, sf_dir), ckpt, out, cursors, audits)
-    q.awaitTermination(300)
-    total = spark.read.parquet(out).count()
-    n_src = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert total == n_src
-    assert audits and all(a["status"] == "success" for a in audits)
-    assert sum(a["rows"] for a in audits) == n_src
-
-    n_batches_first = len(audits)
-    q2 = run_ingestion_job(spark, stream_events(spark, sf_dir), ckpt, out, cursors, audits)
-    q2.awaitTermination(300)
-    assert spark.read.parquet(out).count() == total  # nothing re-ingested
-    assert sum(a["rows"] for a in audits) == n_src  # no new audit rows with data
-    assert len(audits) <= n_batches_first + 1  # at most an empty finalize batch
 
 
 def test_dq_gate_stream_matches_batch(spark, sf_dir):

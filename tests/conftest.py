@@ -19,3 +19,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def query_census(spark, sf_dir):
+    """Every registered query's frame and executed physical plan, built
+    once for the registry-wide sweeps (tests/test_plan_properties.py,
+    tests/test_no_decimal_surfaces.py): name -> (DataFrame, SparkPlan)."""
+    from merl_etl_spark.registry import QUERIES, load_all
+
+    load_all()
+    census = {}
+    for name, fn in QUERIES.items():
+        df = fn(spark, sf_dir)
+        census[name] = (df, df._jdf.queryExecution().executedPlan())
+    return census

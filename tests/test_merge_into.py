@@ -112,3 +112,69 @@ def test_merge_partitioned_keeps_rows_of_a_null_partition(spark, tmp_path):
     )
     got = {(r.token, r.holder): r.qty for r in spark.read.parquet(path).collect()}
     assert got == {(None, "h1"): 150, (None, "h2"): 200, ("t", "h9"): 900}
+
+
+def _group_input_records(spark, group: str) -> int:
+    """Rows read by every stage of the jobs run under ``group`` (stages
+    skipped because their shuffle output was reused count nothing)."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store, tracker = jsc.statusStore(), sc.statusTracker()
+    rows = 0
+    for jid in tracker.getJobIdsForGroup(group):
+        info = tracker.getJobInfo(jid)
+        for sid in info.stageIds if info else ():
+            stage = tracker.getStageInfo(sid)
+            if stage is not None and stage.numCompletedTasks:
+                rows += store.lastStageAttempt(sid).inputRecords()
+    return rows
+
+
+def test_merge_partitioned_reads_only_the_touched_partitions(spark, tmp_path):
+    """The target read is pruned to the partitions the update names: a
+    merge into the small partition must not scan the big one, and each
+    touched partition is written straight to the target — no sibling
+    ``.staging-*`` copy and no ``.spark-staging-*`` directory is left."""
+    import os
+    import uuid
+
+    path = str(tmp_path / "holders")
+    schema = "token string, holder string, qty long, updated long"
+    big, small, n_upd = 3000, 100, 20
+    rows = [("big", f"h{i}", i, 1) for i in range(big)] + [("small", f"h{i}", i, 1) for i in range(small)]
+    spark.createDataFrame(rows, schema).write.partitionBy("token").parquet(path)
+    # half the update replaces existing keys, half inserts new ones
+    upd = spark.createDataFrame(
+        [("small", f"h{i}", -i, 2) for i in range(small - n_upd // 2, small + n_upd // 2)], schema
+    )
+
+    group = f"merge-read-{uuid.uuid4().hex[:8]}"
+    spark.sparkContext.setJobGroup(group, "pruned merge read")
+    try:
+        touched = merge_into_parquet(
+            spark, path, upd, ["token", "holder"], [F.col("updated").desc()], ["token"]
+        )
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    read = _group_input_records(spark, group)
+
+    assert read <= small + 2 * n_upd, f"merge read {read} rows for a {small}-row partition"
+    assert read < big + small
+    assert touched == [("small",)]
+    got = spark.read.parquet(path)
+    assert got.filter(F.col("token") == "big").count() == big
+    assert got.filter(F.col("token") == "small").count() == small + n_upd // 2
+    assert sorted(os.listdir(tmp_path)) == ["holders"]
+    assert not [d for d in os.listdir(path) if d.startswith((".staging-", ".spark-staging-"))]
+
+
+def test_merge_partitioned_empty_update_touches_nothing(spark, tmp_path):
+    """An update with no rows names no partition: nothing is read or
+    written, and the merge says so by returning no partition values."""
+    path = str(tmp_path / "holders")
+    schema = "token string, holder string, qty long, updated long"
+    assert merge_into_parquet(
+        spark, path, spark.createDataFrame([], schema), ["token", "holder"], [F.col("updated").desc()], ["token"]
+    ) == []
+    assert not (tmp_path / "holders").exists()

@@ -32,15 +32,14 @@ from merl_etl_spark.registry import QUERIES, load_all
 load_all()
 
 
-def test_no_query_emits_decimal_columns(spark, sf_dir):
+def test_no_query_emits_decimal_columns(query_census):
     """Schema-only pass over every registered query (no execution): any
     DECIMAL column at the output boundary will silently go driver-red
     regardless of values — fail it here with the offending columns
     named.  No exceptions: the one deliberate decimal surface was
     retired from the registry in r13."""
     offenders: dict[str, list[str]] = {}
-    for name, fn in QUERIES.items():
-        df = fn(spark, sf_dir)
+    for name, (df, _) in query_census.items():
         dec_cols = [
             f.name
             for f in df.schema.fields

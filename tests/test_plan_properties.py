@@ -203,7 +203,7 @@ _BNLJ_AGG_NODES = {
 }
 
 
-def _bnlj_offenders(df) -> list:
+def _bnlj_offenders(plan) -> list:
     """Every BroadcastNestedLoopJoin in the plan whose BROADCAST side
     carries no boundedness marker: a grouping-free (global, 1-row)
     aggregate, a limit/top-k node, or a local relation.  ReusedExchange
@@ -227,7 +227,7 @@ def _bnlj_offenders(df) -> list:
         return False
 
     bad = []
-    stack = [df._jdf.queryExecution().executedPlan()]
+    stack = [plan]
     while stack:
         node = stack.pop()
         nm = node.getClass().getSimpleName()
@@ -252,7 +252,7 @@ def _bnlj_offenders(df) -> list:
     return bad
 
 
-def test_every_nested_loop_join_broadcasts_a_bounded_side(spark, sf_dir):
+def test_every_nested_loop_join_broadcasts_a_bounded_side(query_census):
     """Registry-wide nested-loop gate (the README's 'anywhere in the
     registry' claim, now actually enforced): a BroadcastNestedLoopJoin
     is only acceptable when its broadcast side is provably bounded —
@@ -264,10 +264,10 @@ def test_every_nested_loop_join_broadcasts_a_bounded_side(spark, sf_dir):
     _UNBOUNDED_BNLJ_MARKER_OK with a written reason."""
     skip = {"src-blockcursor-replay"}  # driver-side drain at construction
     offenders = {}
-    for name, fn in QUERIES.items():
+    for name, (_, plan) in query_census.items():
         if name in skip or name in _UNBOUNDED_BNLJ_MARKER_OK:
             continue
-        bad = _bnlj_offenders(fn(spark, sf_dir))
+        bad = _bnlj_offenders(plan)
         if bad:
             offenders[name] = len(bad)
     assert not offenders, offenders
@@ -391,9 +391,9 @@ _UNPARTITIONED_WINDOW_ALLOWLIST = {
 }
 
 
-def _unpartitioned_window_count(df) -> int:
+def _unpartitioned_window_count(plan) -> int:
     n = 0
-    stack = [df._jdf.queryExecution().executedPlan()]
+    stack = [plan]
     while stack:
         node = stack.pop()
         cname = node.getClass().getSimpleName()
@@ -408,7 +408,7 @@ def _unpartitioned_window_count(df) -> int:
     return n
 
 
-def test_unpartitioned_windows_are_exactly_the_allowlist(spark, sf_dir):
+def test_unpartitioned_windows_are_exactly_the_allowlist(query_census):
     """Sweep EVERY registered query's physical plan: the set of queries
     containing empty-partition window nodes must equal the documented
     allowlist — no more (a new scale hazard), no fewer (stale allowlist)."""
@@ -417,10 +417,10 @@ def test_unpartitioned_windows_are_exactly_the_allowlist(spark, sf_dir):
     # CONSTRUCTION (full stream drain + replay); its plan is a local
     # relation aggregate with no window nodes — skip the drain cost here
     skip = {"src-blockcursor-replay"}
-    for name, fn in QUERIES.items():
+    for name, (_, plan) in query_census.items():
         if name in skip:
             continue
-        c = _unpartitioned_window_count(fn(spark, sf_dir))
+        c = _unpartitioned_window_count(plan)
         if c:
             offenders[name] = c
     assert offenders == _UNPARTITIONED_WINDOW_ALLOWLIST

@@ -183,6 +183,41 @@ def test_cursors_are_the_scanned_max_after_the_append(spark, transfers, tmp_path
     assert got(relisted) == want
 
 
+def test_replay_after_a_crash_before_the_cursor_write_appends_nothing(spark, transfers, tmp_path):
+    """Kill point after the append and before the cursor write: the next
+    run re-offers the same raw batch against the grown table and the OLD
+    cursors.  It must append nothing and write the cursors an
+    uninterrupted run wrote (the reference's idempotent replay,
+    merlin_etl.py:438-450,463)."""
+    wallet = transfers.select("wallet_address").first()[0]
+    earlier = transfers.filter(F.col("wallet_address") == wallet)
+
+    def cursors_of(path):
+        return {r.stream: (r.last_scanned_block, r.last_page) for r in spark.read.parquet(path).collect()}
+
+    def hour(name: str, crash: bool) -> None:
+        table, cur = str(tmp_path / name / "transfers"), str(tmp_path / name / "cursors")
+        spark.createDataFrame(cursors_pdf()).write.parquet(cur + "0")
+        old = spark.read.parquet(cur + "0")
+        # the table already holds an earlier batch, so the hour has replays
+        ingest_transfers(earlier, transfers.limit(0), old)[0].write.parquet(table)
+        new_rows, merged = ingest_transfers(transfers, spark.read.parquet(table), old)
+        new_rows.write.mode("append").parquet(table)
+        if crash:
+            # the cursor write never happened; the re-run sees the grown table
+            new_rows, merged = ingest_transfers(transfers, spark.read.parquet(table), old)
+            assert new_rows.count() == 0
+            new_rows.write.mode("append").parquet(table)
+        merged.write.parquet(cur + "1")
+
+    hour("clean", crash=False)
+    hour("crashed", crash=True)
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    assert cursors_of(crashed + "/cursors1") == cursors_of(clean + "/cursors1")
+    rows = lambda path: sorted(map(str, spark.read.parquet(path).collect()))  # noqa: E731
+    assert rows(crashed + "/transfers") == rows(clean + "/transfers")
+
+
 def test_cursor_merge_commutative_and_monotone(spark):
     c = spark.createDataFrame(cursors_pdf())
     a = c.filter("last_page = 5")

@@ -94,3 +94,63 @@ def test_state_dir_stays_bounded_under_replays(spark, tmp_path):
         f"{len(files)} state files across {n_parts} partitions — growing "
         f"with micro-batch count instead of staying compacted"
     )
+
+
+def test_restart_after_a_crash_between_state_and_top100_matches_uninterrupted(
+    spark, tmp_path, monkeypatch
+):
+    """Kill point after the state merge is published and before the
+    Top-100 is written: the first Top-100 ranking of the first
+    micro-batch fails, the query dies, and a restart on the same
+    checkpoint replays that batch.  The re-merge of identical rows must
+    collapse (keyed last-wins) and the run must end with exactly the
+    state and Top-100 of an uninterrupted run — replays are safe end to
+    end."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from merl_etl_spark.plans import jobs
+
+    src = str(tmp_path / "src")
+    holders = spark.createDataFrame(holders_pdf(n_holders=120), schema=HOLDERS_SPARK_SCHEMA)
+    holders.orderBy(F.rand(seed=5)).repartition(6).write.mode("overwrite").parquet(src)
+
+    def run(name: str):
+        stream = spark.readStream.schema(HOLDERS_SPARK_SCHEMA).option(
+            "maxFilesPerTrigger", 2
+        ).parquet(src)
+        q = run_top100_maintenance(
+            spark,
+            stream,
+            TOKENS[0],
+            str(tmp_path / name / "state"),
+            str(tmp_path / name / "top100"),
+            str(tmp_path / name / "ckpt"),
+        )
+        q.awaitTermination(300)
+
+    run("clean")
+
+    real, calls = jobs.scale_and_rank_top100, []
+
+    def crash_once(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected crash before the Top-100 write")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(jobs, "scale_and_rank_top100", crash_once)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run("crashed")
+    # the crash landed between the two writes: state published, no Top-100
+    assert spark.read.parquet(str(tmp_path / "crashed" / "state")).count() > 0
+    assert not (tmp_path / "crashed" / "top100").exists()
+    run("crashed")
+
+    canon = lambda df: sorted(  # noqa: E731
+        map(tuple, ((str(v) for v in r) for r in df.select(sorted(df.columns)).collect()))
+    )
+    for table in ("state", "top100"):
+        want = spark.read.parquet(str(tmp_path / "clean" / table))
+        got = spark.read.parquet(str(tmp_path / "crashed" / table))
+        assert canon(got) == canon(want), table

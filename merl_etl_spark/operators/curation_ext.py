@@ -496,7 +496,6 @@ def curate_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Training pipelines need every example assigned a stable pseudo-random
 # position (the "global shuffle" before sharding into training files).
 SHUFFLE_SEED = "shuf42|"
-SHUFFLE_BUCKETS = 256  # first md5 byte — fixed fan-out for the offset pass
 
 
 @register(
@@ -521,7 +520,7 @@ def curate_shuffle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle_pos is exactly row_number() over the global md5 order (the
     oracle computes it that way), but the Spark plan never moves the
     corpus to one partition: the only unpartitioned window runs over the
-    ≤SHUFFLE_BUCKETS-row count summary (allowlisted in
+    ≤256-row count summary (allowlisted in
     test_plan_properties with that boundedness argument), which is the
     same bounded-carry pattern the as-of tier uses.  Content-seeded
     hashing — never rand() — keeps the shuffle reproducible across

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -71,13 +71,3 @@ def write_bucketed(
         writer = writer.sortBy(*sort_cols)
     writer.format("parquet").saveAsTable(table)
 
-
-def bucketed_join_plan_has_no_exchange(spark: SparkSession, t1: str, t2: str, key: str) -> bool:
-    """Plan probe: join two same-bucketed tables on the bucket key and check
-    the physical plan contains no shuffle Exchange (used by tests; also a
-    deploy-time sanity check)."""
-    # hint MERGE: Catalyst would otherwise broadcast a small side, which
-    # hides the bucket co-location this probe exists to demonstrate
-    j = spark.table(t1).hint("merge").join(spark.table(t2), key)
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    return "SortMergeJoin" in plan and "Exchange hashpartitioning" not in plan

@@ -1828,7 +1828,6 @@ def analytics_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFram
 
 # flag threshold: |x − median| > 3σ-equivalent = 3 × 1.4826 × MAD, kept
 # as the exact integer comparison 20000·|D| > 44478·MAD4 (see below).
-MAD_K_MILLI = 4448  # 3 × 1.4826 ≈ 4.4478, for display only
 
 
 @register(

@@ -208,9 +208,7 @@ def stream_cursor_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows with a 30-minute inactivity gap via
     ``F.session_window`` — the Structured-Streaming-native session
-    operator (its streaming twin is ``streaming.pipeline.
-    session_window_stream``; parity pinned in tests/test_streaming.py).
-    Unlike win-sessionize (the lag/cumsum island form over a plain
+    operator; a stream runs this same plan.  Unlike win-sessionize (the lag/cumsum island form over a plain
     window), this is the mergeable representation the streaming engine
     can maintain incrementally with watermark-evicted state.
 

@@ -3,23 +3,18 @@
 scripts/notify_telegram.sh).
 
 Rendering is columnar (JVM expressions over the movers/totals DataFrames);
-only the final ≤11-row collect crosses to the driver, where a Notifier
-delivers it.  The Telegram HTTP call is behind an interface and never
-exercised in tests (SURVEY.md §7.3: no real network)."""
+only the final ≤11-row collect crosses to the driver, where a notifier
+delivers it.  The one notifier here records messages instead of posting
+them (SURVEY.md §7.3: no real network)."""
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Protocol
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from merl_etl_spark.functions import scalar as S
-
-
-class Notifier(Protocol):
-    def send(self, message: str, mode: str = "HTML") -> bool: ...
 
 
 @dataclass
@@ -31,36 +26,6 @@ class CollectingNotifier:
     def send(self, message: str, mode: str = "HTML") -> bool:
         self.sent.append((message, mode))
         return True
-
-
-class TelegramNotifier:
-    """Real delivery edge (scripts/notify_telegram.sh:11-26).  Requires
-    bot credentials and network access; constructed only in production."""
-
-    def __init__(self, bot_token: str, chat_id: str):
-        self.bot_token = bot_token
-        self.chat_id = chat_id
-
-    def send(self, message: str, mode: str = "HTML") -> bool:
-        import json
-        import urllib.error
-        import urllib.request
-
-        req = urllib.request.Request(
-            f"https://api.telegram.org/bot{self.bot_token}/sendMessage",
-            data=json.dumps(
-                {"chat_id": self.chat_id, "text": message, "parse_mode": mode}
-            ).encode(),
-            headers={"Content-Type": "application/json"},
-        )
-        try:  # pragma: no cover — network edge, never exercised in tests
-            with urllib.request.urlopen(req, timeout=30) as resp:
-                return json.loads(resp.read()).get("ok", False)
-        except (urllib.error.URLError, urllib.error.HTTPError, TimeoutError):
-            # the Notifier contract is bool — a 4xx/5xx or network failure
-            # is a failed delivery, not a job crash (the reference's
-            # notify_telegram.sh likewise just reports non-ok)
-            return False
 
 
 def render_activity_report(

@@ -89,21 +89,21 @@ def merge_into_parquet(
     updates: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[Column],
-    partition_cols: Sequence[str] | None = None,
+    partition_cols: Sequence[str],
 ) -> list[tuple]:
     """MERGE (upsert) into a plain-parquet table: union target + updates,
     keep the winning row per conflict key, rewrite.  This is the
     table-format-free equivalent of Delta/Iceberg MERGE the reference's
     ON CONFLICT DO UPDATE maps to (merlin_etl.py:304-318).
 
-    It is the engine's one keyed upsert.  With ``partition_cols`` it
-    collects the distinct partition-value tuples of ``updates`` on the
-    driver and returns them (``[]`` when ``updates`` is empty — then
-    nothing is read or written).  The target read is pruned to those
-    partitions: an OR of null-safe equalities on the partition columns
-    (a NULL partition value is matched like any other) that the planner
-    turns into ``PartitionFilters``, so no file of an untouched partition
-    is scanned (the file index still lists them).  The merged rows of
+    It is the engine's one keyed upsert.  It collects the distinct
+    partition-value tuples of ``updates`` on the driver and returns them
+    (``[]`` when ``updates`` is empty — then nothing is read or
+    written).  The target read is pruned to those partitions: an OR of
+    null-safe equalities on the partition columns (a NULL partition value
+    is matched like any other) that the planner turns into
+    ``PartitionFilters``, so no file of an untouched partition is scanned
+    (the file index still lists them).  The merged rows of
     each touched partition are written once, straight to ``target_path``
     by a dynamic partition overwrite (``snapshot_replace``).
     CONTRACT: every partition column must be functionally determined by
@@ -112,31 +112,19 @@ def merge_into_parquet(
     in the old partition (the classic MERGE-on-partitioned-path hazard);
     use a lakehouse format if keys migrate between partitions.
 
-    Crash safety (partitioned): Spark's dynamic-overwrite commit writes
-    every task's output under ``<target>/.spark-staging-<jobId>/`` and
-    swaps the partition directories in only at job commit, after every
-    read task has finished; a crash before the commit leaves the target
+    Crash safety: Spark's dynamic-overwrite commit writes every task's
+    output under ``<target>/.spark-staging-<jobId>/`` and swaps the
+    partition directories in only at job commit, after every read task
+    has finished; a crash before the commit leaves the target
     as it was.  A crash between a partition's delete and its rename
     leaves that partition missing until it is restored from
     ``.spark-staging-<jobId>/``, which then holds the full merged
-    partition (readers skip the hidden directory).
-
-    Without ``partition_cols`` the whole table rewrites (fine for small
-    control tables like cursors) and ``[]`` is returned.  Spark refuses
-    to overwrite a path its own plan reads from, so the merged result is
-    staged in a sibling directory first; the staging copy is deleted
-    only after the target write succeeds, so a crash mid-overwrite
-    leaves it as the recovery source.  Single-writer discipline per
-    target path is the caller's job (the reference used flock,
-    scripts/ingest_tokentx_top100.sh:13-18); staging paths are unique
-    per run so concurrent writers cannot corrupt each other's staging."""
-    import uuid
-
-    touched: list[tuple] = []
-    if partition_cols:
-        touched = [tuple(r) for r in updates.select(*partition_cols).distinct().collect()]
-        if not touched:
-            return touched
+    partition (readers skip the hidden directory).  Single-writer
+    discipline per target path is the caller's job (the reference used
+    flock, scripts/ingest_tokentx_top100.sh:13-18)."""
+    touched = [tuple(r) for r in updates.select(*partition_cols).distinct().collect()]
+    if not touched:
+        return touched
 
     # scheme-aware existence check: probe for committed parquet data via a
     # read attempt (os.path.exists would be wrong for s3a://, hdfs://,
@@ -158,7 +146,7 @@ def merge_into_parquet(
             raise
         target_exists = False
 
-    if target_exists and partition_cols:
+    if target_exists:
         # null-safe: a NULL partition value names a partition too, and
         # plain `=` would drop its untouched rows from the overwrite
         matches = (
@@ -166,52 +154,13 @@ def merge_into_parquet(
             for values in touched
         )
         existing = target.filter(reduce(operator.or_, matches))
-    elif target_exists:
-        existing = target
     else:
         existing = updates.limit(0)
     merged = upsert_last_wins(
         existing.unionByName(updates, allowMissingColumns=False), keys, order_by
     )
-    if partition_cols:
-        snapshot_replace(merged, target_path, partition_cols)
-        return touched
-    staging = f"{target_path.rstrip('/')}.staging-{uuid.uuid4().hex[:12]}"
-    merged.write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging).write.mode("overwrite").parquet(target_path)
-    _delete_path(spark, staging)
+    snapshot_replace(merged, target_path, partition_cols)
     return touched
-
-
-def _delete_path(spark: SparkSession, path: str) -> None:
-    """Scheme-aware recursive delete through the Hadoop filesystem layer
-    (works for local paths, file:, hdfs://, s3a:// alike)."""
-    fs, jpath = _hadoop_fs(spark, path)
-    fs.delete(jpath, True)
-
-
-def write_partitioned(df: DataFrame, path: str, partition_cols: Sequence[str]) -> None:
-    """Write a dataset in the engine's canonical layout:
-    ``partitionBy(contract_address, bucket_date)`` replaces the reference's
-    B-tree indexes (SURVEY.md §1.4; schema.sql:57-62,125-130).  Equality
-    predicates on the partition columns then prune whole directories at
-    plan time — at 100 TB a one-token/one-bucket query reads one
-    partition's files, not the table."""
-    df.write.mode("append").partitionBy(*partition_cols).parquet(path)
-
-
-def partition_pruning_proof(spark: SparkSession, path: str, predicate: str) -> tuple[int, int]:
-    """Plan probe: (files read under predicate, total files), measured via
-    input_file_name() at execution.  Meaningful ONLY for predicates on
-    PARTITION columns (its purpose: a layout check) — a row-level
-    predicate that happens to empty some files would overstate pruning,
-    since fully-scanned files yielding no rows are not counted."""
-    df = spark.read.parquet(path)
-
-    def files_read(d) -> int:
-        return d.select(F.input_file_name().alias("f")).distinct().count()
-
-    return files_read(df.filter(predicate)), files_read(df)
 
 
 def compact_parquet(
@@ -317,138 +266,6 @@ def run_with_audit(job_name: str, scheduled_for, body, audit_log: list):
     )
     audit_log.append(row)
     return result
-
-
-# ---------------------------------------------------------------------------
-# Schema-introspecting destination adaptation
-# ---------------------------------------------------------------------------
-
-# logical field → accepted destination column names, in preference order
-# (sql/top100_from_latest_bucket.sql:46-76 discovers these via
-# information_schema; on Spark the destination's StructType plays that role)
-TOP100_COLUMN_SYNONYMS: dict[str, tuple[str, ...]] = {
-    "bucket_start_utc": ("bucket_start_utc", "bucket_utc", "asof", "bucket_ts", "ts_bucket"),
-    "contract_address": ("contract_address", "token", "token_address", "contract"),
-    "holder_address": ("holder_address", "address", "wallet_address", "owner_address"),
-    "rnk": ("rnk", "rank", "position"),
-    "token_decimal": ("token_decimal", "decimals", "token_decimals"),
-    "balance_raw": ("balance_raw", "raw_balance", "quantity_raw", "qty_raw",
-                    "balance_base_units"),
-    "balance": ("balance", "balance_ip", "balance_decimal", "qty"),
-    "inserted_at": ("inserted_at", "updated_at", "created_at"),
-}
-_TOP100_OPTIONAL = frozenset({"bucket_start_utc", "inserted_at"})
-_ADDRESS_FIELDS = frozenset({"contract_address", "holder_address"})
-
-
-def adapt_to_destination(
-    df: DataFrame,
-    dest_schema,
-    synonyms: dict[str, tuple[str, ...]] = TOP100_COLUMN_SYNONYMS,
-    optional: frozenset = _TOP100_OPTIONAL,
-    inserted_at=None,
-    unmapped: str = "error",
-) -> DataFrame:
-    """Rename/select ``df`` to fit a destination table whose column names
-    (and address encodings) may differ — the Spark counterpart of the
-    reference's ``information_schema.columns`` discovery + column-list
-    adaptation (sql/top100_from_latest_bucket.sql:46-117).
-
-    For each logical field, the first synonym present in ``dest_schema``
-    (a StructType, e.g. ``spark.read.parquet(path).schema``) wins.
-    Required fields with no match raise (mirroring the psql sanity
-    ``\\quit 1``); optional fields (bucket, inserted_at) are dropped when
-    the destination lacks them.  Address fields targeting a BinaryType
-    column are hex-decoded from their ``0x…`` string form (the bytea
-    branch at sql/top100_from_latest_bucket.sql:104-117); everything else
-    is cast to the destination's exact type.  An ``inserted_at``-family
-    column absent from ``df`` is filled with the supplied timestamp.
-
-    Columns are emitted in DESTINATION schema order (not synonym-dict
-    order) so positional sinks — ``insertInto``, positional JDBC INSERT —
-    land every value in the right column.  Destination columns no synonym
-    covers therefore cannot be silently dropped: the default
-    ``unmapped='error'`` raises; ``unmapped='null'`` fills nullable ones
-    with typed NULLs (and still raises on NOT NULL columns).  Malformed hex in an address
-    bound for a binary column raises at execution (``decode(...,'hex')``
-    aborts the load in the reference; a silent ``unhex``→NULL would write
-    a corrupt NULL key instead).
-
-    Pure projection — no shuffle, composes with any sink at any scale."""
-    from pyspark.sql import types as T
-
-    if unmapped not in ("error", "null"):
-        # validated unconditionally (ADVICE r5): a typo'd mode must fail on
-        # every call, not only once an uncovered destination column appears
-        raise ValueError(f"unmapped must be 'error' or 'null', got {unmapped!r}")
-    dest_types = {f.name: f.dataType for f in dest_schema.fields}
-    by_target: dict[str, F.Column] = {}
-    # destination columns a synonym DID match but the source can't fill
-    # (optional logical field absent from df) — reported distinctly from
-    # truly-unmapped columns so the error names the real remedy
-    optional_unfilled: dict[str, str] = {}
-    for logical, names in synonyms.items():
-        target = next((n for n in names if n in dest_types), None)
-        if target is None:
-            if logical in optional:
-                continue
-            raise ValueError(f"could not map required column {logical!r} "
-                             f"onto destination schema {sorted(dest_types)}")
-        if logical not in df.columns:
-            if logical == "inserted_at" and inserted_at is not None:
-                by_target[target] = F.lit(inserted_at).cast(dest_types[target]).alias(target)
-                continue
-            if logical in optional:
-                optional_unfilled[target] = logical
-                continue
-            raise ValueError(f"source frame lacks required column {logical!r}")
-        col = F.col(logical)
-        if logical in _ADDRESS_FIELDS and isinstance(dest_types[target], T.BinaryType):
-            # '0x…' hex string → raw bytes, the reference's decode(...,'hex');
-            # fail loudly on undecodable input rather than writing NULL keys
-            hexpart = F.regexp_replace(F.lower(col), "^0x", "")
-            decoded = F.unhex(hexpart)
-            col = F.when(
-                col.isNotNull() & decoded.isNull(),
-                F.raise_error(F.concat(F.lit(f"malformed hex in {logical}: "), col)),
-            ).otherwise(decoded)
-        by_target[target] = col.cast(dest_types[target]).alias(target)
-    uncovered = [f.name for f in dest_schema.fields if f.name not in by_target]
-    if uncovered:
-        # a destination column missing from the projection would silently
-        # vanish — fatal for the positional sinks this function promises
-        # to serve (insertInto lands values by POSITION, so a dropped
-        # column shifts every later value one slot left)
-        if unmapped == "error":
-            hints = []
-            for c in uncovered:
-                if c in optional_unfilled:
-                    logical = optional_unfilled[c]
-                    remedy = (
-                        "pass inserted_at=<timestamp>"
-                        if logical == "inserted_at"
-                        else f"add {logical!r} to the source frame"
-                    )
-                    hints.append(
-                        f"{c!r} (matches optional field {logical!r} which the "
-                        f"source frame lacks — {remedy}, or unmapped='null')"
-                    )
-                else:
-                    hints.append(f"{c!r} (no synonym maps onto it)")
-            raise ValueError(
-                "destination columns cannot be filled: " + "; ".join(hints)
-                + ". Pass unmapped='null' to fill nullable ones with typed NULLs."
-            )
-        for f in dest_schema.fields:
-            if f.name in by_target:
-                continue
-            if not f.nullable:
-                raise ValueError(
-                    f"destination column {f.name!r} is unmapped and NOT NULL — "
-                    f"a typed-NULL fill would fail the constraint"
-                )
-            by_target[f.name] = F.lit(None).cast(f.dataType).alias(f.name)
-    return df.select(*[by_target[f.name] for f in dest_schema.fields])
 
 
 # ---------------------------------------------------------------------------

@@ -13,19 +13,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -40,9 +27,6 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #   → cast to TIMESTAMP (session tz is UTC, so the instant is unchanged);
 # - TIMESTAMP(MICROS, isAdjustedToUTC=true) → already TIMESTAMP, no-op.
 EVENT_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
-
-# Backward-compat alias (pre-r5 name).
-NANOS_TS_COLS = EVENT_TS_COLS
 
 # Runtime session requirements.  The external driver hands queries its OWN
 # SparkSession (built without this engine's session.py), so every entry
@@ -89,16 +73,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for the SQL API.
-
-    Mirrors the reference's compatibility view pattern
-    (CREATE OR REPLACE VIEW, schema.sql:34-35 → sink-view).
-    """
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -21,7 +21,19 @@ from decimal import Decimal
 import duckdb
 import pandas as pd
 
-from merl_etl_spark.sources.tables import TABLES
+# the fixture tables (TESTDATA.md), each a DuckDB view for the oracles
+TABLES = (
+    "region",
+    "nation",
+    "customer",
+    "supplier",
+    "part",
+    "orders",
+    "lineitem",
+    "events",
+    "documents",
+    "embeddings",
+)
 
 
 def duck_run(sf_dir: str, sql: str) -> pd.DataFrame:

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from merl_etl_spark.plans.jobs import activity_report, derive_top100, ingest_transfers
 from merl_etl_spark.plans.reporting import CollectingNotifier, render_activity_report
-from merl_etl_spark.sinks import run_with_audit, snapshot_replace, upsert_last_wins, write_partitioned
+from merl_etl_spark.sinks import run_with_audit, snapshot_replace, upsert_last_wins
 from tests.fixtures import (
     ASOF,
     HOLDERS_SPARK_SCHEMA,
@@ -42,10 +42,11 @@ def test_full_reference_workflow(spark, tmp_path):
             ["bucket_start_utc", "contract_address", "holder_address"],
             [F.col("updated_at").desc(), F.col("quantity_raw").desc()],
         )
-        write_partitioned(
-            deduped.withColumn("bucket_date", F.to_date("bucket_start_utc")),
-            str(tmp_path / "holders"),
-            ["contract_address", "bucket_date"],
+        (
+            deduped.withColumn("bucket_date", F.to_date("bucket_start_utc"))
+            .write.mode("append")
+            .partitionBy("contract_address", "bucket_date")
+            .parquet(str(tmp_path / "holders"))
         )
         return deduped, {"rows": deduped.count()}
 

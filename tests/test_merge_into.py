@@ -19,25 +19,6 @@ def _order():
     return [F.col("updated").desc()]
 
 
-def test_merge_unpartitioned_upsert(spark, tmp_path):
-    path = str(tmp_path / "cursors")
-    merge_into_parquet(
-        spark, path, _cursors(spark, [("a", 10, 1), ("b", 20, 1)]), ["stream"], _order()
-    )
-    # update a, insert c
-    merge_into_parquet(
-        spark, path, _cursors(spark, [("a", 15, 2), ("c", 5, 2)]), ["stream"], _order()
-    )
-    got = {r.stream: r.last_scanned_block for r in spark.read.parquet(path).collect()}
-    assert got == {"a": 15, "b": 20, "c": 5}
-    # replay is a no-op
-    merge_into_parquet(
-        spark, path, _cursors(spark, [("a", 15, 2), ("c", 5, 2)]), ["stream"], _order()
-    )
-    again = {r.stream: r.last_scanned_block for r in spark.read.parquet(path).collect()}
-    assert again == got
-
-
 def test_merge_partitioned_touches_only_update_partitions(spark, tmp_path):
     path = str(tmp_path / "holders")
     df = spark.createDataFrame(
@@ -64,24 +45,23 @@ def test_merge_partitioned_touches_only_update_partitions(spark, tmp_path):
         ("t1", "h3"): 50,
         ("t2", "h1"): 300,
     }
-
-
-def test_merge_staging_cleaned_and_wrecked_dir_self_heals(spark, tmp_path):
-    import os
-
-    path = str(tmp_path / "t")
+    # replay is a no-op
     merge_into_parquet(
-        spark, path, _cursors(spark, [("a", 1, 1)]), ["stream"], _order()
+        spark, path, upd, ["token", "holder"], [F.col("updated").desc()], ["token"]
     )
-    # staging dirs are unique-per-run and removed on success
-    assert not [d for d in os.listdir(str(tmp_path)) if ".staging-" in d]
+    again = {(r.token, r.holder): r.qty for r in spark.read.parquet(path).collect()}
+    assert again == got
+
+
+def test_merge_wrecked_dir_self_heals(spark, tmp_path):
+    import os
 
     # a directory with no committed parquet (crashed first write) must not
     # wedge the merge — it reads as "no table" and the next merge succeeds
     wrecked = str(tmp_path / "w")
     os.makedirs(os.path.join(wrecked, "_temporary"))
     merge_into_parquet(
-        spark, wrecked, _cursors(spark, [("x", 9, 1)]), ["stream"], _order()
+        spark, wrecked, _cursors(spark, [("x", 9, 1)]), ["stream"], _order(), ["stream"]
     )
     assert {r.stream for r in spark.read.parquet(wrecked).collect()} == {"x"}
 

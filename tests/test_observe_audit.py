@@ -5,6 +5,7 @@ and integrated with the run_with_audit discipline."""
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -60,10 +61,13 @@ def test_observe_feeds_run_with_audit(spark, sf_dir):
 def test_streaming_observe_in_progress(spark, sf_dir, tmp_path):
     """Streaming observe: per-batch metrics surface in the query progress
     (observedMetrics) — the zero-cost streaming audit channel."""
-    from merl_etl_spark.streaming.pipeline import stream_events
-
-    stream = stream_events(spark, sf_dir).observe(
-        "audit", F.count(F.lit(1)).alias("n_rows")
+    # a file stream reads a directory; the glob picks the events table
+    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+        .observe("audit", F.count(F.lit(1)).alias("n_rows"))
     )
     q = (
         stream.writeStream.format("noop")

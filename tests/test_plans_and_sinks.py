@@ -332,174 +332,3 @@ def test_insert_ignore_null_tx_index_key(spark, transfers):
         [F.col("block_number").asc()],
     )
     assert appended.count() == 1
-
-
-def test_adapt_to_destination_renamed_binary_table(spark, holders, tmp_path):
-    """information_schema-style destination adaptation end-to-end
-    (sql/top100_from_latest_bucket.sql:46-117): derive Top-100, adapt it
-    onto a destination whose every column is a synonym rename with bytea
-    (binary) addresses, write + read back, and check values survived."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from merl_etl_spark.sinks import adapt_to_destination
-
-    dest_schema = T.StructType(
-        [
-            T.StructField("bucket_utc", T.TimestampType()),
-            T.StructField("token", T.BinaryType()),
-            T.StructField("address", T.BinaryType()),
-            T.StructField("position", T.IntegerType()),
-            T.StructField("decimals", T.IntegerType()),
-            T.StructField("raw_balance", T.StringType()),
-            T.StructField("qty", T.DecimalType(38, 6)),
-            T.StructField("updated_at", T.TimestampType()),
-        ]
-    )
-    top = derive_top100(holders, TOKENS[0])
-    stamp = dt.datetime(2024, 1, 1)
-    adapted = adapt_to_destination(top, dest_schema, inserted_at=stamp)
-    assert adapted.columns == [
-        "bucket_utc", "token", "address", "position",
-        "decimals", "raw_balance", "qty", "updated_at",
-    ]
-    path = str(tmp_path / "renamed_top100")
-    adapted.write.parquet(path)
-    back = spark.read.parquet(path)
-    src = {r.rnk: r for r in top.collect()}
-    for r in back.collect():
-        s = src[r.position]
-        # binary address round-trips to the original 0x hex form
-        assert "0x" + r.address.hex() == s.holder_address.lower()
-        assert "0x" + r.token.hex() == s.contract_address.lower()
-        assert r.raw_balance == s.balance_raw and r.qty == s.balance
-        assert r.updated_at == stamp
-
-
-def test_adapt_to_destination_missing_required_raises(spark, holders):
-    from pyspark.sql import types as T
-
-    from merl_etl_spark.sinks import adapt_to_destination
-
-    top = derive_top100(holders, TOKENS[0])
-    no_holder = T.StructType(
-        [T.StructField("token", T.StringType()), T.StructField("rank", T.LongType())]
-    )
-    with pytest.raises(ValueError, match="holder_address"):
-        adapt_to_destination(top, no_holder)
-
-
-def test_adapt_to_destination_optional_columns_dropped(spark, holders):
-    """A destination without bucket/inserted_at columns just doesn't get
-    them (the reference's has_bucket=0 branch)."""
-    from pyspark.sql import types as T
-
-    from merl_etl_spark.sinks import adapt_to_destination
-
-    top = derive_top100(holders, TOKENS[0])
-    minimal = T.StructType(
-        [
-            T.StructField("contract", T.StringType()),
-            T.StructField("owner_address", T.StringType()),
-            T.StructField("rank", T.LongType()),
-            T.StructField("token_decimals", T.LongType()),
-            T.StructField("qty_raw", T.StringType()),
-            T.StructField("balance_decimal", T.DecimalType(38, 6)),
-        ]
-    )
-    adapted = adapt_to_destination(top, minimal)
-    assert adapted.columns == [
-        "contract", "owner_address", "rank", "token_decimals", "qty_raw", "balance_decimal"
-    ]
-    assert adapted.count() == top.count()
-
-
-def test_adapt_to_destination_emits_destination_column_order(spark, holders):
-    """Positional sinks (insertInto, positional JDBC INSERT) rely on the
-    projection matching the destination's physical column order — synonym-
-    dict order must NOT leak through."""
-    from pyspark.sql import types as T
-
-    from merl_etl_spark.sinks import adapt_to_destination
-
-    top = derive_top100(holders, TOKENS[0])
-    scrambled = T.StructType(
-        [
-            T.StructField("qty", T.DecimalType(38, 6)),
-            T.StructField("position", T.IntegerType()),
-            T.StructField("owner_address", T.StringType()),
-            T.StructField("contract", T.StringType()),
-            T.StructField("token_decimals", T.LongType()),
-            T.StructField("raw_balance", T.StringType()),
-        ]
-    )
-    adapted = adapt_to_destination(top, scrambled)
-    assert adapted.columns == [
-        "qty", "position", "owner_address", "contract", "token_decimals", "raw_balance"
-    ]
-
-
-def test_adapt_to_destination_malformed_hex_raises(spark):
-    """The reference's decode(...,'hex') aborts on bad input; unhex→NULL
-    silently writing a NULL address key must not replace that."""
-    from pyspark.sql import types as T
-    from pyspark.sql import utils as _u  # noqa: F401
-
-    from merl_etl_spark.sinks import adapt_to_destination
-
-    bad = spark.createDataFrame(
-        [("0xZZ", "0xabcd", 1, 18, "1", "1.000000")],
-        "holder_address string, contract_address string, rnk long, "
-        "token_decimal long, balance_raw string, balance string",
-    ).withColumn("balance", F.col("balance").cast("decimal(38,6)"))
-    dest = T.StructType(
-        [
-            T.StructField("token", T.BinaryType()),
-            T.StructField("address", T.BinaryType()),
-            T.StructField("rank", T.LongType()),
-            T.StructField("decimals", T.LongType()),
-            T.StructField("balance_raw", T.StringType()),
-            T.StructField("qty", T.DecimalType(38, 6)),
-        ]
-    )
-    with pytest.raises(Exception, match="malformed hex"):
-        adapt_to_destination(bad, dest).collect()
-
-
-def test_adapt_to_destination_unmapped_column_raises(spark, holders):
-    """A destination column no synonym covers must not silently vanish —
-    positional sinks would shift every later value one slot left
-    (ADVICE r3; sql/top100_from_latest_bucket.sql's column-list discovery
-    always emits the full physical list)."""
-    from pyspark.sql import types as T
-
-    from merl_etl_spark.sinks import adapt_to_destination
-
-    top = derive_top100(holders, TOKENS[0])
-    with_extra = T.StructType(
-        [
-            T.StructField("contract", T.StringType()),
-            T.StructField("owner_address", T.StringType()),
-            T.StructField("rank", T.LongType()),
-            T.StructField("token_decimals", T.LongType()),
-            T.StructField("qty_raw", T.StringType()),
-            T.StructField("balance_decimal", T.DecimalType(38, 6)),
-            T.StructField("chain_id", T.LongType()),  # no synonym maps here
-        ]
-    )
-    with pytest.raises(ValueError, match="chain_id"):
-        adapt_to_destination(top, with_extra)
-
-    # opt-in policy: typed-NULL fill keeps positional alignment
-    adapted = adapt_to_destination(top, with_extra, unmapped="null")
-    assert adapted.columns[-1] == "chain_id"
-    assert dict(adapted.dtypes)["chain_id"] == "bigint"
-    assert adapted.filter(F.col("chain_id").isNotNull()).count() == 0
-
-    # NOT NULL unmapped columns can never be filled — always loud
-    not_null = T.StructType(
-        with_extra.fields[:-1] + [T.StructField("chain_id", T.LongType(), nullable=False)]
-    )
-    with pytest.raises(ValueError, match="NOT NULL"):
-        adapt_to_destination(top, not_null, unmapped="null")

@@ -133,22 +133,6 @@ def test_asof_nearest_rejects_duplicate_left_key(spark):
         )
 
 
-def test_adapt_to_destination_validates_unmapped_eagerly(spark):
-    """An invalid unmapped= mode must raise even when every destination
-    column is covered (previously it only surfaced once an uncovered
-    column appeared)."""
-    import pytest
-
-    from merl_etl_spark.sinks import adapt_to_destination
-
-    df = spark.createDataFrame(
-        [("0xabc", 1)], "holder_address string, rnk long"
-    )
-    dest = spark.createDataFrame([("x", 2)], "holder_address string, rnk long").schema
-    with pytest.raises(ValueError, match="unmapped must be"):
-        adapt_to_destination(df, dest, unmapped="nulls")
-
-
 def test_blockcursor_named_error_on_non_numeric_option():
     """A non-numeric blocks_per_batch must raise the NAMED option error,
     not a bare int() ValueError."""

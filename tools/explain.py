@@ -1,14 +1,14 @@
 #!/usr/bin/env python
 """Capture .explain("formatted") for every bench headline query.
 
-Round-15 optimization tooling (guide §1): writes plans/r15/<query>_<tag>.txt
-for each query plus a one-line-per-query plan-shape summary TSV
-(exchanges / sorts / join strategies / python-eval nodes / window nodes)
+Writes plans/explain/<query>_<tag>.txt for each query plus a
+one-line-per-query plan-shape summary, plans/explain/_summary_<tag>.tsv
+(exchanges / sorts / join strategies / python-eval nodes / window nodes),
 so the expensive plan shapes can be ranked mechanically.
 
 Usage:
-    python tools/explain_r15.py before            # all headline queries
-    python tools/explain_r15.py after q1,q2,...   # only the named queries
+    python tools/explain.py before            # all headline queries
+    python tools/explain.py after q1,q2,...   # only the named queries
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from merl_etl_spark import registry  # noqa: E402
 from merl_etl_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r15")
+OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "explain")
 
 PATTERNS = {
     "exchange": re.compile(r"^\s*[+:*-]*\s*\(?\d*\)?\s*Exchange", re.M),
